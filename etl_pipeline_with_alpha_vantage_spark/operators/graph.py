@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import spread, table
+from ..catalog import artifact, spread, table
 from ..registry import query
 
 # One undirected co-supply edge list per (session, sf_dir): PageRank,
@@ -27,11 +27,8 @@ from ..registry import query
 # supp*2 / part*2+1, doubled both directions). Building it is the
 # family's dominant fixed cost — a full fact-table scan + distinct —
 # so it is materialized ONCE (eager localCheckpoint truncates lineage;
-# checkpointed blocks are reused, never recomputed) and shared, the
-# `_MERGE_CACHE` memoization discipline of operators/lakehouse.py. At
+# checkpointed blocks are reused, never recomputed) and shared. At
 # 100 TB this turns 4 fact-table scans into 1 per analytical session.
-# Memoized ON the session object (catalog._session_cache) so a stopped
-# session's checkpointed blocks are collectable.
 
 
 def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,45 +39,41 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     carrying it in the ONE checkpointed artifact means repeated calls
     (bench min-of-n, parity sweeps) never stack per-call checkpoint
     copies in the driver's storage memory."""
-    from ..catalog import _session_cache, derived_memo_key  # noqa: PLC0415
 
-    cache = _session_cache(spark)
-    key = derived_memo_key("cosupply_edges", sf_dir, ("lineitem",))
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    li = table(spark, sf_dir, "lineitem")
-    pairs = li.select(
-        (F.col("l_suppkey") * 2).alias("src"),
-        (F.col("l_partkey") * 2 + 1).alias("dst"),
-    ).distinct()
-    und = pairs.unionAll(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    # Degree attaches via a src-partitioned window instead of
-    # groupBy+join-back: the window rides und's ONE hash(src) exchange
-    # (count over the whole partition frame), where the join form paid
-    # a second pass over the edge list plus the deg exchange (guide
-    # §2.4 "two operations keyed the same way can share one exchange").
-    # Measured on the build (isolated, min-of-4): 1.41 -> 0.86 s at
-    # sf0.1 and 8.0 -> 2.3 s on the 10x tiled fixture — and the
-    # checkpointed artifact keeps the same hash(src) partitioning every
-    # consumer relies on (r13).
-    edges = und.withColumn(
-        "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-    ).localCheckpoint(eager=True)
-    try:
-        # The checkpointed partition count is AQE's size-coalesced
-        # answer (~bytes / advisoryPartitionSizeInBytes), i.e. a
-        # scale-adaptive signal consumers can size dependent shuffles
-        # from (sql_bfs_distances' recursive walk does — r13, guide
-        # §2.2). Probed once per materialization; the RDD handle
-        # already exists, so this is metadata, not a job.
-        edges._sg_nparts = edges.rdd.getNumPartitions()
-    except Exception:
-        pass
-    cache[key] = edges
-    return edges
+    def build():
+        li = table(spark, sf_dir, "lineitem")
+        pairs = li.select(
+            (F.col("l_suppkey") * 2).alias("src"),
+            (F.col("l_partkey") * 2 + 1).alias("dst"),
+        ).distinct()
+        und = pairs.unionAll(
+            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        # Degree attaches via a src-partitioned window instead of
+        # groupBy+join-back: the window rides und's ONE hash(src) exchange
+        # (count over the whole partition frame), where the join form paid
+        # a second pass over the edge list plus the deg exchange (guide
+        # §2.4 "two operations keyed the same way can share one exchange").
+        # Measured on the build (isolated, min-of-4): 1.41 -> 0.86 s at
+        # sf0.1 and 8.0 -> 2.3 s on the 10x tiled fixture — and the
+        # checkpointed artifact keeps the same hash(src) partitioning every
+        # consumer relies on (r13).
+        edges = und.withColumn(
+            "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+        ).localCheckpoint(eager=True)
+        try:
+            # The checkpointed partition count is AQE's size-coalesced
+            # answer (~bytes / advisoryPartitionSizeInBytes), i.e. a
+            # scale-adaptive signal consumers can size dependent shuffles
+            # from (sql_bfs_distances' recursive walk does — r13, guide
+            # §2.2). Probed once per materialization; the RDD handle
+            # already exists, so this is metadata, not a job.
+            edges._sg_nparts = edges.rdd.getNumPartitions()
+        except Exception:
+            pass
+        return edges
+
+    return artifact(spark, "cosupply_edges", sf_dir, ("lineitem",), build)
 
 _PR_ITERS = 3
 _PR_INIT = 1_000_000  # initial rank units per node
@@ -234,40 +227,37 @@ _PRW_WCAP = 1000
 def _cosupply_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized WEIGHTED undirected co-supply edge list: (src, dst, w,
     wsum) where w = clipped lineitem multiplicity of the (supp, part)
-    pair and wsum = src's total outgoing weight. Same checkpoint-once
-    discipline as _cosupply_edges — the weighted family's shared
-    fixture (one fact scan per session/sf_dir)."""
-    from ..catalog import _session_cache, derived_memo_key  # noqa: PLC0415
+    pair and wsum = src's total outgoing weight. The weighted family's
+    shared edge list: one fact scan per session and input."""
 
-    cache = _session_cache(spark)
-    key = derived_memo_key("cosupply_edges_weighted", sf_dir, ("lineitem",))
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    li = table(spark, sf_dir, "lineitem")
-    mult = (
-        li.groupBy(
-            (F.col("l_suppkey") * 2).alias("s"),
-            (F.col("l_partkey") * 2 + 1).alias("p"),
+    def build():
+        li = table(spark, sf_dir, "lineitem")
+        mult = (
+            li.groupBy(
+                (F.col("l_suppkey") * 2).alias("s"),
+                (F.col("l_partkey") * 2 + 1).alias("p"),
+            )
+            .agg(
+                F.least(F.count(F.lit(1)), F.lit(_PRW_WCAP))
+                .cast("long")
+                .alias("w")
+            )
         )
-        .agg(
-            F.least(F.count(F.lit(1)), F.lit(_PRW_WCAP))
-            .cast("long")
-            .alias("w")
+        und = mult.select(
+            F.col("s").alias("src"), F.col("p").alias("dst"), "w"
+        ).unionAll(
+            mult.select(F.col("p").alias("src"), F.col("s").alias("dst"), "w")
         )
+        # Same one-exchange window attach as _cosupply_edges (r13).
+        edges = und.withColumn(
+            "wsum",
+            F.sum("w").over(Window.partitionBy("src")).cast("long"),
+        ).localCheckpoint(eager=True)
+        return edges
+
+    return artifact(
+        spark, "cosupply_edges_weighted", sf_dir, ("lineitem",), build
     )
-    und = mult.select(
-        F.col("s").alias("src"), F.col("p").alias("dst"), "w"
-    ).unionAll(
-        mult.select(F.col("p").alias("src"), F.col("s").alias("dst"), "w")
-    )
-    # Same one-exchange window attach as _cosupply_edges (r13).
-    edges = und.withColumn(
-        "wsum",
-        F.sum("w").over(Window.partitionBy("src")).cast("long"),
-    ).localCheckpoint(eager=True)
-    cache[key] = edges
-    return edges
 
 
 def _prw_oracle() -> str:
@@ -644,69 +634,65 @@ def _dedup_pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted index → Jaccard-thresholded pairs, checkpointed (the edge
     list feeds many self-join roles) and memoized on the session so the
     two queries share one materialization per (session, sf_dir)."""
-    from ..catalog import _session_cache, derived_memo_key  # noqa: PLC0415
 
-    cache = _session_cache(spark)
-    key = derived_memo_key("dedup_pair_edges", sf_dir, ("documents",))
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    docs = spread(table(spark, sf_dir, "documents"))
-    toks = docs.select("doc_id", F.split("text", " ").alias("toks")).filter(
-        F.size("toks") >= 3
-    )
-    n2 = F.size("toks") - 2
-    tri_arr = F.zip_with(
-        F.slice("toks", 1, n2),
-        F.zip_with(
-            F.slice("toks", 2, n2),
-            F.slice("toks", 3, n2),
-            lambda b, c: F.concat(b, F.lit(" "), c),
-        ),
-        lambda a, bc: F.concat(a, F.lit(" "), bc),
-    )
-    grams0 = toks.select(
-        "doc_id", F.explode(F.array_distinct(tri_arr)).alias("gram")
-    )
-    keep = (
-        grams0.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= _TRI_DF_CAP)
-        .select("gram")
-    )
-    grams = grams0.join(keep, "gram")
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = grams.alias("a"), grams.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.gram") == F.col("b.gram"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    def build():
+        docs = spread(table(spark, sf_dir, "documents"))
+        toks = docs.select("doc_id", F.split("text", " ").alias("toks")).filter(
+            F.size("toks") >= 3
         )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        n2 = F.size("toks") - 2
+        tri_arr = F.zip_with(
+            F.slice("toks", 1, n2),
+            F.zip_with(
+                F.slice("toks", 2, n2),
+                F.slice("toks", 3, n2),
+                lambda b, c: F.concat(b, F.lit(" "), c),
+            ),
+            lambda a, bc: F.concat(a, F.lit(" "), bc),
         )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    pairs = (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(
-            F.col("n_common").cast("double")
-            / (F.col("sa.n") + F.col("sb.n") - F.col("n_common"))
-            >= _TRI_JACCARD
+        grams0 = toks.select(
+            "doc_id", F.explode(F.array_distinct(tri_arr)).alias("gram")
         )
-        .select("doc_a", "doc_b")
-        # The edge list feeds deg twice, the orientation join, and THREE
-        # roles of the triangle self-join; without cutting lineage here
-        # the inverted-index subtree would be cloned into every branch
-        # (~120 scans in the static plan). Materialize the (tiny) edge
-        # list once — same discipline as CC's per-sweep checkpoint.
-        .localCheckpoint(eager=False)
-    )
-    cache[key] = pairs
-    return pairs
+        keep = (
+            grams0.groupBy("gram")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") <= _TRI_DF_CAP)
+            .select("gram")
+        )
+        grams = grams0.join(keep, "gram")
+        sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+        a, b = grams.alias("a"), grams.alias("b")
+        inter = (
+            a.join(
+                b,
+                (F.col("a.gram") == F.col("b.gram"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .groupBy(
+                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            )
+            .agg(F.count(F.lit(1)).alias("n_common"))
+        )
+        sa, sb = sizes.alias("sa"), sizes.alias("sb")
+        pairs = (
+            inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+            .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+            .filter(
+                F.col("n_common").cast("double")
+                / (F.col("sa.n") + F.col("sb.n") - F.col("n_common"))
+                >= _TRI_JACCARD
+            )
+            .select("doc_a", "doc_b")
+            # The edge list feeds deg twice, the orientation join, and THREE
+            # roles of the triangle self-join; without cutting lineage here
+            # the inverted-index subtree would be cloned into every branch
+            # (~120 scans in the static plan). Materialize the (tiny) edge
+            # list once — same discipline as CC's per-sweep checkpoint.
+            .localCheckpoint(eager=False)
+        )
+        return pairs
+
+    return artifact(spark, "dedup_pair_edges", sf_dir, ("documents",), build)
 
 
 def oriented_triangles(pairs: DataFrame, wedge_observation=None) -> DataFrame:
@@ -897,53 +883,49 @@ def _lpa_final_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (session, sf_dir) and lazily checkpointed: node-dust relative
     to the fact table, so materializing it once is the 2×-win side of
     the checkpoint-dust/recompute-corpus discipline."""
-    from ..catalog import _session_cache, derived_memo_key  # noqa: PLC0415
 
-    cache = _session_cache(spark)
-    key = derived_memo_key("lpa_labels", sf_dir, ("lineitem",))
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    edges = _cosupply_edges(spark, sf_dir).select("src", "dst")
-    labels = edges.select(F.col("src").alias("node_id")).distinct().select(
-        "node_id", F.col("node_id").alias("label")
-    )
-    for _ in range(_LPA_ITERS):
-        # Per sweep: join-on-src → codegen count on (dst, label) →
-        # struct-max argmax on dst. max(struct(c, -label)) picks the
-        # most frequent label with ties to the SMALLEST label — exactly
-        # the deterministic recurrence. This r13 shape replaced
-        # mode(label, true) (a TypedImperativeAggregate holding a
-        # per-node label→count map, no codegen): the count+struct-max
-        # pair is two exchanges but both are codegen hash aggregates
-        # with map-side partials that collapse the per-edge stream to
-        # (node, label) dust before the second exchange — same-window
-        # min-of-4: 5.40 → 3.70 s on the 10x tiled fixture, flat
-        # (1.71/1.77 s) at sf0.1 where the memo makes it cold-only.
-        # (The even older groupBy+WINDOW argmax was slower than both —
-        # a window pays a sort, struct-max doesn't.)
-        cnt = (
-            edges.join(
-                labels.withColumnRenamed("node_id", "src").hint(
-                    "shuffle_hash"
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node_id"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
+    def build():
+        edges = _cosupply_edges(spark, sf_dir).select("src", "dst")
+        labels = edges.select(F.col("src").alias("node_id")).distinct().select(
+            "node_id", F.col("node_id").alias("label")
         )
-        labels = (
-            cnt.groupBy("node_id")
-            .agg(
-                F.max(
-                    F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-                ).alias("mx")
+        for _ in range(_LPA_ITERS):
+            # Per sweep: join-on-src → codegen count on (dst, label) →
+            # struct-max argmax on dst. max(struct(c, -label)) picks the
+            # most frequent label with ties to the SMALLEST label — exactly
+            # the deterministic recurrence. This r13 shape replaced
+            # mode(label, true) (a TypedImperativeAggregate holding a
+            # per-node label→count map, no codegen): the count+struct-max
+            # pair is two exchanges but both are codegen hash aggregates
+            # with map-side partials that collapse the per-edge stream to
+            # (node, label) dust before the second exchange — same-window
+            # min-of-4: 5.40 → 3.70 s on the 10x tiled fixture, flat
+            # (1.71/1.77 s) at sf0.1 where the memo makes it cold-only.
+            # (The even older groupBy+WINDOW argmax was slower than both —
+            # a window pays a sort, struct-max doesn't.)
+            cnt = (
+                edges.join(
+                    labels.withColumnRenamed("node_id", "src").hint(
+                        "shuffle_hash"
+                    ),
+                    "src",
+                )
+                .groupBy(F.col("dst").alias("node_id"), "label")
+                .agg(F.count(F.lit(1)).alias("c"))
             )
-            .select("node_id", (-F.col("mx.nl")).alias("label"))
-        )
-    labels = labels.localCheckpoint(eager=False)
-    cache[key] = labels
-    return labels
+            labels = (
+                cnt.groupBy("node_id")
+                .agg(
+                    F.max(
+                        F.struct(F.col("c"), (-F.col("label")).alias("nl"))
+                    ).alias("mx")
+                )
+                .select("node_id", (-F.col("mx.nl")).alias("label"))
+            )
+        labels = labels.localCheckpoint(eager=False)
+        return labels
+
+    return artifact(spark, "lpa_labels", sf_dir, ("lineitem",), build)
 
 
 # --------------------------------------------------------------------------
@@ -1319,55 +1301,50 @@ def _landmark_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (= min distance) and sigma the EXACT shortest-path count (σ(v) =
     Σ σ(pred) over the previous layer — order-insensitive integer
     sums). Shared by graph_closeness_landmark (ignores sigma) and
-    graph_betweenness_sampled (forward pass) — the _cosupply_edges
-    checkpoint-once discipline, so bench/parity reruns pay the BFS
-    once per session/sf_dir."""
-    from ..catalog import _session_cache, derived_memo_key  # noqa: PLC0415
+    graph_betweenness_sampled (forward pass), so bench/parity reruns
+    pay the BFS once per session and input."""
 
-    cache = _session_cache(spark)
-    key = derived_memo_key("landmark_bfs", sf_dir, ("lineitem",))
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    edges = _cosupply_edges(spark, sf_dir).select("src", "dst")
-    lm_nodes = [s * 2 for s in _LM_SUPPS]
-    visited = (
-        edges.filter(F.col("src").isin(lm_nodes))
-        .select(F.col("src").alias("node"))
-        .distinct()
-        .select(
-            "node",
-            F.col("node").alias("lm"),
-            F.lit(0).alias("dist"),
-            F.lit(1).cast("long").alias("sigma"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited.select("node", "lm", "sigma")
-    for depth in range(1, _LM_HOPS + 1):
-        reached = (
-            # shuffle_hash: edges ride the fixture's hash(src)
-            # partitioning — no per-hop edge exchange or SMJ sort
-            # (r12 optimization round, same A/B as the backward pass).
-            frontier.join(
-                edges.hint("shuffle_hash"),
-                frontier["node"] == edges["src"],
+    def build():
+        edges = _cosupply_edges(spark, sf_dir).select("src", "dst")
+        lm_nodes = [s * 2 for s in _LM_SUPPS]
+        visited = (
+            edges.filter(F.col("src").isin(lm_nodes))
+            .select(F.col("src").alias("node"))
+            .distinct()
+            .select(
+                "node",
+                F.col("node").alias("lm"),
+                F.lit(0).alias("dist"),
+                F.lit(1).cast("long").alias("sigma"),
             )
-            .groupBy(F.col("dst").alias("node"), F.col("lm"))
-            .agg(F.sum("sigma").cast("long").alias("sigma"))
-        )
-        fresh = (
-            reached.join(
-                visited.select("node", "lm"), ["node", "lm"], "left_anti"
-            )
-            .withColumn("dist", F.lit(depth))
-            .select("node", "lm", "dist", "sigma")
             .localCheckpoint(eager=True)
         )
-        visited = visited.unionByName(fresh).localCheckpoint(eager=True)
-        frontier = fresh.select("node", "lm", "sigma")
-    cache[key] = visited
-    return visited
+        frontier = visited.select("node", "lm", "sigma")
+        for depth in range(1, _LM_HOPS + 1):
+            reached = (
+                # shuffle_hash: edges ride the fixture's hash(src)
+                # partitioning — no per-hop edge exchange or SMJ sort
+                # (r12 optimization round, same A/B as the backward pass).
+                frontier.join(
+                    edges.hint("shuffle_hash"),
+                    frontier["node"] == edges["src"],
+                )
+                .groupBy(F.col("dst").alias("node"), F.col("lm"))
+                .agg(F.sum("sigma").cast("long").alias("sigma"))
+            )
+            fresh = (
+                reached.join(
+                    visited.select("node", "lm"), ["node", "lm"], "left_anti"
+                )
+                .withColumn("dist", F.lit(depth))
+                .select("node", "lm", "dist", "sigma")
+                .localCheckpoint(eager=True)
+            )
+            visited = visited.unionByName(fresh).localCheckpoint(eager=True)
+            frontier = fresh.select("node", "lm", "sigma")
+        return visited
+
+    return artifact(spark, "landmark_bfs", sf_dir, ("lineitem",), build)
 
 
 @query("graph_closeness_landmark", oracle=_closeness_oracle())
@@ -1786,31 +1763,23 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # repartitioned on `part` BEFORE the eager localCheckpoint, so the
 # LogicalRDD carries that partitioning and the wedge SELF-JOINS (and
 # the part-degree aggregations) plan with ZERO additional exchanges.
-# Memoized ON the session object (catalog._session_cache) so stopped
-# sessions' checkpointed blocks are collectable — a module-level dict
-# keyed by session_ident pinned them for the process lifetime.
 
 
 def _supplier_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..catalog import _session_cache, derived_memo_key  # noqa: PLC0415
-
-    cache = _session_cache(spark)
-    key = derived_memo_key("supplier_part_pairs", sf_dir, ("lineitem",))
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    li = table(spark, sf_dir, "lineitem")
-    sp = (
-        li.select(
-            F.col("l_suppkey").cast("long").alias("supp"),
-            F.col("l_partkey").cast("long").alias("part"),
+    def build():
+        li = table(spark, sf_dir, "lineitem")
+        sp = (
+            li.select(
+                F.col("l_suppkey").cast("long").alias("supp"),
+                F.col("l_partkey").cast("long").alias("part"),
+            )
+            .distinct()
+            .repartition("part")
+            .localCheckpoint(eager=True)
         )
-        .distinct()
-        .repartition("part")
-        .localCheckpoint(eager=True)
-    )
-    cache[key] = sp
-    return sp
+        return sp
+
+    return artifact(spark, "supplier_part_pairs", sf_dir, ("lineitem",), build)
 
 
 _RA_HUB_CAP = 50  # parts supplied by more suppliers than this are hubs

@@ -10,15 +10,12 @@ one relation.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import session_ident
+from ..catalog import fixture_dir, table
 from ..registry import query
 
 _E1_ROWS = 1000  # epoch 1: (id, qty)
@@ -46,39 +43,21 @@ FROM merged
 """
 
 
-# The two-epoch fixture is deterministic, so write it ONCE per Spark
-# session (keyed by applicationId) instead of a fresh mkdtemp + rewrite
-# per invocation — repeated bench/parity sweeps were leaking temp dirs
-# and redundant write jobs. atexit reclaims the directories.
-_EVOLVE_CACHE: dict[str, str] = {}
-
-
-def _cleanup_evolve_fixtures() -> None:
-    for path in _EVOLVE_CACHE.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _EVOLVE_CACHE.clear()
-
-
-atexit.register(_cleanup_evolve_fixtures)
-
-
 def _evolve_fixture(spark: SparkSession) -> str:
-    app_id = session_ident(spark)
-    base = _EVOLVE_CACHE.get(app_id)
-    if base is not None and os.path.isdir(base):
-        return base
-    base = tempfile.mkdtemp(prefix="spark_graft_evolve_")
-    e1 = spark.range(0, _E1_ROWS).select(
-        F.col("id"), (F.col("id") % 7).alias("qty")
-    )
-    e1.write.mode("overwrite").parquet(os.path.join(base, "epoch=1"))
-    e2 = spark.range(_E1_ROWS, _E1_ROWS + _E2_ROWS).select(
-        F.col("id"),
-        (((F.col("id") * 31) % 500).cast("double") / 100.0).alias("price"),
-    )
-    e2.write.mode("overwrite").parquet(os.path.join(base, "epoch=2"))
-    _EVOLVE_CACHE[app_id] = base
-    return base
+    """The two deterministic write epochs; they read no table."""
+
+    def write(base: str) -> None:
+        e1 = spark.range(0, _E1_ROWS).select(
+            F.col("id"), (F.col("id") % 7).alias("qty")
+        )
+        e1.write.mode("overwrite").parquet(os.path.join(base, "epoch=1"))
+        e2 = spark.range(_E1_ROWS, _E1_ROWS + _E2_ROWS).select(
+            F.col("id"),
+            (((F.col("id") * 31) % 500).cast("double") / 100.0).alias("price"),
+        )
+        e2.write.mode("overwrite").parquet(os.path.join(base, "epoch=2"))
+
+    return fixture_dir(spark, "evolve", "", (), write)
 
 
 @query("schema_evolution_merge", oracle=_EVOLVE_ORACLE)
@@ -169,40 +148,18 @@ def _max_custkey(tgt: DataFrame) -> int:
     return int(tgt.agg(F.max("c_custkey")).collect()[0][0])
 
 
-# One merged table per (session, sf_dir): the merge itself is the
-# expensive part of the fixture, and parity sweeps invoke the query
-# repeatedly — same memoization discipline as _evolve_fixture.
-_MERGE_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _cleanup_merge_fixtures() -> None:
-    for path in _MERGE_CACHE.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _MERGE_CACHE.clear()
-
-
-atexit.register(_cleanup_merge_fixtures)
-
-
-def _merge_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Build a segment-partitioned customer table, apply one
-    deterministic copy-on-write MERGE (updates + deletes in two
-    segments, inserts into one), and return the table path."""
-    from ..catalog import table  # noqa: PLC0415
-    from ..sinks.maintenance import merge_into  # noqa: PLC0415
-
-    key = (session_ident(spark), sf_dir)
-    base = _MERGE_CACHE.get(key)
-    if base is not None and os.path.isdir(base):
-        return base
-    base = tempfile.mkdtemp(prefix="spark_graft_merge_")
+def _merge_change_set(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The merge target (a customer projection) and the deterministic
+    change set both merge fixtures apply: updates + deletes in two
+    segments, inserts into one."""
     tgt = table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.col("c_nationkey").cast("int").alias("c_nationkey"),
         F.round(F.col("c_acctbal") * 100).cast("long").alias("acctbal_cents"),
         "c_mktsegment",
     )
-    tgt.write.mode("overwrite").partitionBy("c_mktsegment").parquet(base)
     in_segs = F.col("c_mktsegment").isin(*_MERGE_SEGS)
     updates = tgt.filter(in_segs & (F.col("c_custkey") % 7 == 3)).select(
         "c_custkey",
@@ -227,26 +184,37 @@ def _merge_fixture(spark: SparkSession, sf_dir: str) -> str:
     ).select(
         # Synthetic insert keys sit ABOVE the table's real key range —
         # a fixed +1M offset would collide with genuine custkeys at
-        # sf>=10 and make the delete path eat innocent base rows.
-        # 1-row scalar collect (bounded), mirrored by the oracle's
-        # scalar subquery.
+        # sf>=10 and make the delete path eat innocent base rows (and,
+        # under merge-on-read, the DV deletes by key). 1-row scalar
+        # collect (bounded), mirrored by the oracle's scalar subquery.
         (F.col("c_custkey") + _max_custkey(tgt)).alias("c_custkey"),
         F.lit(0).cast("int").alias("c_nationkey"),
         F.lit(777_700).cast("long").alias("acctbal_cents"),
         F.lit("BUILDING").alias("c_mktsegment"),
         F.lit(False).alias("is_del"),
     )
-    source = updates.unionByName(deletes).unionByName(inserts)
-    merge_into(
-        spark,
-        base,
-        source,
-        key_cols=["c_custkey"],
-        partition_col="c_mktsegment",
-        delete_col="is_del",
-    )
-    _MERGE_CACHE[key] = base
-    return base
+    return tgt, updates.unionByName(deletes).unionByName(inserts)
+
+
+def _merge_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """Build a segment-partitioned customer table, apply one
+    deterministic copy-on-write MERGE of the change set, and return the
+    table path."""
+    from ..sinks.maintenance import merge_into  # noqa: PLC0415
+
+    def write(base: str) -> None:
+        tgt, source = _merge_change_set(spark, sf_dir)
+        tgt.write.mode("overwrite").partitionBy("c_mktsegment").parquet(base)
+        merge_into(
+            spark,
+            base,
+            source,
+            key_cols=["c_custkey"],
+            partition_col="c_mktsegment",
+            delete_col="is_del",
+        )
+
+    return fixture_dir(spark, "merge", sf_dir, ("customer",), write)
 
 
 @query("lakehouse_merge_cow", oracle=_MERGE_ORACLE)
@@ -310,46 +278,29 @@ GROUP BY version
 ORDER BY version
 """
 
-_TT_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _cleanup_tt_fixtures() -> None:
-    for path in _TT_CACHE.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _TT_CACHE.clear()
-
-
-atexit.register(_cleanup_tt_fixtures)
-
-
 def _time_travel_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Commit four snapshot versions of an orders slice: two appends,
     one overwrite, then a rollback to version 2."""
-    from ..catalog import table  # noqa: PLC0415
     from ..sinks.snapshots import rollback, snapshot_commit  # noqa: PLC0415
 
-    key = (session_ident(spark), sf_dir)
-    base = _TT_CACHE.get(key)
-    if base is not None and os.path.isdir(base):
-        return base
-    base = tempfile.mkdtemp(prefix="spark_graft_snap_")
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
-    )
-    snapshot_commit(
-        spark, base, o.filter(F.col("o_orderkey") % 4 == 0), mode="append"
-    )
-    snapshot_commit(
-        spark, base, o.filter(F.col("o_orderkey") % 4 == 1), mode="append"
-    )
-    snapshot_commit(
-        spark, base, o.filter((F.col("o_orderkey") % 4).isin(2, 3)),
-        mode="overwrite",
-    )
-    rollback(spark, base, 2)
-    _TT_CACHE[key] = base
-    return base
+    def write(base: str) -> None:
+        o = table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
+        )
+        snapshot_commit(
+            spark, base, o.filter(F.col("o_orderkey") % 4 == 0), mode="append"
+        )
+        snapshot_commit(
+            spark, base, o.filter(F.col("o_orderkey") % 4 == 1), mode="append"
+        )
+        snapshot_commit(
+            spark, base, o.filter((F.col("o_orderkey") % 4).isin(2, 3)),
+            mode="overwrite",
+        )
+        rollback(spark, base, 2)
+
+    return fixture_dir(spark, "snap", sf_dir, ("orders",), write)
 
 
 @query("lakehouse_time_travel", oracle=_TT_ORACLE)
@@ -395,82 +346,28 @@ def lakehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Merge-on-read twin: deletion vector + delta files, zero base rewrites
 # --------------------------------------------------------------------------
 
-_MOR_CACHE: dict[tuple[str, str], tuple[str, str, str]] = {}
-
-
-def _cleanup_mor_fixtures() -> None:
-    for paths in _MOR_CACHE.values():
-        for path in paths:
-            shutil.rmtree(path, ignore_errors=True)
-    _MOR_CACHE.clear()
-
-
-atexit.register(_cleanup_mor_fixtures)
-
-
 def _mor_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """Stage the SAME change set as _merge_fixture, but merge-on-read
     style: (base, deletion-vector, delta) directories. The base is
     never rewritten — updates become DV-delete + delta-append, deletes
     only a DV entry, inserts only a delta row."""
-    from ..catalog import table  # noqa: PLC0415
 
-    key = (session_ident(spark), sf_dir)
-    cached = _MOR_CACHE.get(key)
-    if cached is not None and all(os.path.isdir(p) for p in cached):
-        return cached
-    base = tempfile.mkdtemp(prefix="spark_graft_mor_base_")
-    dv = tempfile.mkdtemp(prefix="spark_graft_mor_dv_")
-    delta = tempfile.mkdtemp(prefix="spark_graft_mor_delta_")
-    tgt = table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").cast("int").alias("c_nationkey"),
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("acctbal_cents"),
-        "c_mktsegment",
-    )
-    tgt.write.mode("overwrite").partitionBy("c_mktsegment").parquet(base)
-    in_segs = F.col("c_mktsegment").isin(*_MERGE_SEGS)
-    updates = tgt.filter(in_segs & (F.col("c_custkey") % 7 == 3)).select(
-        "c_custkey",
-        "c_nationkey",
-        (F.col("acctbal_cents") + 12345).alias("acctbal_cents"),
-        "c_mktsegment",
-        F.lit(False).alias("is_del"),
-    )
-    deletes = tgt.filter(
-        in_segs
-        & (F.col("c_custkey") % 13 == 0)
-        & (F.col("c_custkey") % 7 != 3)
-    ).select(
-        "c_custkey",
-        "c_nationkey",
-        "acctbal_cents",
-        "c_mktsegment",
-        F.lit(True).alias("is_del"),
-    )
-    inserts = tgt.filter(
-        (F.col("c_mktsegment") == "AUTOMOBILE") & (F.col("c_custkey") % 11 == 5)
-    ).select(
-        # Same above-MAX key derivation as _merge_fixture — the DV
-        # deletes by key, so a colliding synthetic key would delete an
-        # innocent base row and diverge MOR from COW at sf>=10.
-        (F.col("c_custkey") + _max_custkey(tgt)).alias("c_custkey"),
-        F.lit(0).cast("int").alias("c_nationkey"),
-        F.lit(777_700).cast("long").alias("acctbal_cents"),
-        F.lit("BUILDING").alias("c_mktsegment"),
-        F.lit(False).alias("is_del"),
-    )
-    source = updates.unionByName(deletes).unionByName(inserts)
-    # DV: every source key invalidates its base row (an update is
-    # delete + re-append under MOR); delta: the surviving new rows.
-    source.select("c_custkey", "c_mktsegment").write.mode(
-        "overwrite"
-    ).parquet(dv)
-    source.filter(~F.col("is_del")).drop("is_del").write.mode(
-        "overwrite"
-    ).parquet(delta)
-    _MOR_CACHE[key] = (base, dv, delta)
-    return base, dv, delta
+    def write(root: str) -> None:
+        tgt, source = _merge_change_set(spark, sf_dir)
+        tgt.write.mode("overwrite").partitionBy("c_mktsegment").parquet(
+            os.path.join(root, "base")
+        )
+        # DV: every source key invalidates its base row (an update is
+        # delete + re-append under MOR); delta: the surviving new rows.
+        source.select("c_custkey", "c_mktsegment").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(root, "dv"))
+        source.filter(~F.col("is_del")).drop("is_del").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(root, "delta"))
+
+    root = fixture_dir(spark, "mor", sf_dir, ("customer",), write)
+    return tuple(os.path.join(root, d) for d in ("base", "dv", "delta"))
 
 
 def mor_read(

@@ -227,7 +227,7 @@ def decode_features(blobs: DataFrame) -> DataFrame:
     pandas materialization, and an Arrow binary column is one contiguous
     data buffer plus an offsets array — so the fake-codec path (every
     non-BMP/PPM blob) vectorizes completely: per-row byte sums come from
-    one int64 cumsum over the shared data buffer sliced at the offsets,
+    one int64 cumsum over the batch's byte window sliced at the offsets,
     and width/height/frames are numpy modular arithmetic on the lengths.
     Results are byte-identical to the row loop: the sums are exact
     integers and mean = int64/int64 is the same IEEE division
@@ -247,6 +247,11 @@ def decode_features(blobs: DataFrame) -> DataFrame:
             ids = batch.column(batch.schema.get_field_index("doc_id"))
             arr = batch.column(batch.schema.get_field_index("blob"))
             n = len(arr)
+            if arr.null_count:
+                # Decoding a NULL slot would invent an image from its
+                # (usually empty) offsets span; refuse the batch instead.
+                bad = ids.filter(arr.is_null())[0]
+                raise ValueError(f"decode_features: NULL blob at doc_id {bad}")
             off_dt = (
                 np.int64 if pa.types.is_large_binary(arr.type) else np.int32
             )
@@ -260,9 +265,12 @@ def decode_features(blobs: DataFrame) -> DataFrame:
                 else np.zeros(0, dtype=np.uint8)
             )
             lens = offs[1:] - offs[:-1]
-            cs = np.zeros(len(data) + 1, dtype=np.int64)
-            np.cumsum(data, dtype=np.int64, out=cs[1:])
-            sums = cs[offs[1:]] - cs[offs[:-1]]
+            # Prefix sums over this slice's byte window only: the data
+            # buffer may be shared with sibling slices of a larger batch.
+            lo, hi = (offs[0], offs[-1]) if n else (0, 0)
+            cs = np.zeros(hi - lo + 1, dtype=np.int64)
+            np.cumsum(data[lo:hi], dtype=np.int64, out=cs[1:])
+            sums = cs[offs[1:] - lo] - cs[offs[:-1] - lo]
             width = (lens % 640 + 1).astype(np.int32)
             height = (lens % 480 + 1).astype(np.int32)
             mean = np.where(lens > 0, sums / np.maximum(lens, 1), 0.0)

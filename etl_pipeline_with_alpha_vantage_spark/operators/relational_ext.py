@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import TABLES, register_views, table
+from ..catalog import TABLES, register_views, scoped_conf, table
 from ..functions.exact import dsum, sql_dsum
 from ..registry import query
 
@@ -1102,27 +1102,21 @@ def sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # UnionLoop step, so unscoped they'd stay at the static session
     # width — 32 micro-partitions of dust at test SFs). The walk only
     # ever shrinks (frontier ⊆ users), so the edge width needs no
-    # expansion factor. Scoped set/restore, the cteRecursionRowLimit
-    # discipline; the walk executes eagerly (a ≤⌈log₂ users⌉-row
-    # aggregate — checkpointing dust) so the conf is live exactly for
-    # its jobs.
+    # expansion factor. The walk executes eagerly (a ≤⌈log₂ users⌉-row
+    # aggregate — checkpointing dust) so the scoped conf is live exactly
+    # for its jobs.
     hier_edges = spark.sql(_HIER_EDGES_SQL).localCheckpoint(eager=True)
     hier_edges.createOrReplaceTempView("hier_edges_v")
     try:
-        walk_n = max(2, hier_edges.rdd.getNumPartitions())
+        width = {
+            "spark.sql.shuffle.partitions": str(
+                max(2, hier_edges.rdd.getNumPartitions())
+            )
+        }
     except Exception:
-        walk_n = None
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions", None)
-    if walk_n is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(walk_n))
-    try:
+        width = {}
+    with scoped_conf(spark, width):
         return spark.sql(_HIER_WALK_SQL).localCheckpoint(eager=True)
-    finally:
-        if walk_n is not None:
-            if prev_sp is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
 # --------------------------------------------------------------------------
@@ -1242,26 +1236,19 @@ def sql_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # walk's width from the edge fixture's own AQE-coalesced partition
     # count (∝ edge bytes — grows with the graph, never with the host),
     # with ×4 headroom for the path-multiset expansion of the 2-hop
-    # walk. Scoped exactly like the recursion row limit below.
+    # walk. Scoped together with the recursion row limit.
     walk_n = max(2, 4 * (getattr(edges_ck, "_sg_nparts", None) or 8))
-    prev = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.cteRecursionRowLimit", "20000000")
-    spark.conf.set("spark.sql.shuffle.partitions", str(walk_n))
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.cteRecursionRowLimit": "20000000",
+            "spark.sql.shuffle.partitions": str(walk_n),
+        },
+    ):
         edges = edges_ck.select("src", "dst")
         edges.createOrReplaceTempView("bfs_edges_v")
         # Eager: the recursion must run while the raised limit is live.
         return spark.sql(_BFS_WALK_SQL).localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.cteRecursionRowLimit")
-        else:
-            spark.conf.set("spark.sql.cteRecursionRowLimit", prev)
-        if prev_sp is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
 # --------------------------------------------------------------------------

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import register_derived_cache, spread, table
+from ..catalog import artifact, spread, table
 from ..registry import query
 
 TOP_K = 10
@@ -330,17 +330,6 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_CENTROIDS = 16
 NPROBE = 4
 
-# Trained-codebook memo, keyed by (corpus path, file mtime): a real IVF
-# deployment trains once and serves many queries against the persisted
-# codebook — rebuilding the quantizer per query is the artificial part.
-# Training is fully deterministic (see similarity_ivf_topk), so the memo
-# changes job count, never results; a fresh process (e.g. the external
-# correctness gate) still trains from scratch and gets identical cells.
-# Registered as a derived cache so bench.py's per-query memo reset also
-# charges codebook training to each query's reported cold run (r13).
-_IVF_CODEBOOK_CACHE: dict = register_derived_cache({})
-
-
 def _unit_udf():
     """L2-normalize embeddings in one Arrow-batched numpy pass.
 
@@ -484,19 +473,15 @@ def _ivf_codebook(spark: SparkSession, sf_dir: str, raw: DataFrame):
     build does before broadcasting the codebook. Returns ``(head,
     cents)``: the bounded head-vector dict (seed/query vectors) and the
     L2-normalized K×dim centroid matrix.
-    """
-    import os
 
+    A real IVF deployment trains once and serves many queries against
+    the persisted codebook, so the codebook is a session artifact.
+    Training is fully deterministic (see similarity_ivf_topk): the memo
+    changes job count, never results.
+    """
     import numpy as np
 
-    # Cache key covers path + mtime_ns + size: a same-second in-place
-    # rewrite (coarse mtime granularity) still changes size or mtime_ns,
-    # so a stale codebook is never served silently.
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    cache_key = (sf_dir, st.st_mtime_ns, st.st_size)
-    if cache_key in _IVF_CODEBOOK_CACHE:
-        head, cents = _IVF_CODEBOOK_CACHE[cache_key]
-    else:
+    def build():
         # Seeds and query vectors come from ONE bounded collect: the
         # max(K, queries) SMALLEST vec_ids via TakeOrderedAndProject —
         # a per-partition top-k, never a corpus materialization. Seeds
@@ -530,8 +515,9 @@ def _ivf_codebook(spark: SparkSession, sf_dir: str, raw: DataFrame):
         for r in dim_means:
             cents[r["cell"], r["pos"]] = r["m"]
         cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-        _IVF_CODEBOOK_CACHE[cache_key] = (head, cents)
-    return head, cents
+        return head, cents
+
+    return artifact(spark, "ivf_codebook", sf_dir, ("embeddings",), build)
 
 
 def _ivf_cells(spark: SparkSession, sf_dir: str):
@@ -2261,21 +2247,14 @@ def _pca_gram_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     (gi, gj, g) table: per-row HALF_UP micro-rounded outer products
     accumulated into int64 per-partition partials by a numpy
     mapInPandas kernel (d² rows emitted per task), merged by one tiny
-    keyed aggregation, checkpointed, memoized per (session, sf_dir) —
-    ON the session object (catalog._session_cache), so a stopped
-    session's checkpointed blocks are collectable; a module-level dict
-    keyed by session_ident pinned them for the process lifetime."""
-    from ..catalog import _session_cache, derived_memo_key  # noqa: PLC0415
+    keyed aggregation, checkpointed, memoized per session and input."""
 
-    cache = _session_cache(spark)
-    key = derived_memo_key("pca_gram_cells", sf_dir, ("embeddings",))
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    emb = table(spark, sf_dir, "embeddings").select("embedding")
-    cells = pca_gram_from(emb)
-    cache[key] = cells
-    return cells
+    def build():
+        emb = table(spark, sf_dir, "embeddings").select("embedding")
+        cells = pca_gram_from(emb)
+        return cells
+
+    return artifact(spark, "pca_gram_cells", sf_dir, ("embeddings",), build)
 
 
 def pca_gram_from(emb: DataFrame) -> DataFrame:

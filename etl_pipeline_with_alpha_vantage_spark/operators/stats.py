@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import artifact, register_views, table
 from ..registry import query
 
 # --------------------------------------------------------------------------
@@ -1216,27 +1216,21 @@ _MK_ORACLE = (
 
 def _mk_monthly_view(spark: SparkSession, sf_dir: str) -> None:
     """Build + register the nations×months dust table ONCE per
-    (session, sf_dir) — the `_cosupply_edges` fixture-memo discipline
-    (r12 optimization round, guide §5 lineage/caching): the eager
-    localCheckpoint is a full orders⋈customer aggregation job, and all
-    THREE trend queries (MK, Theil–Sen, seasonal MK) re-ran it on every
-    build. The checkpointed 400-row artifact is the shared fixture; a
-    switched sf_dir re-materializes and re-binds the view."""
-    from ..catalog import (  # noqa: PLC0415
-        _session_cache,
-        derived_memo_key,
-        register_views,
-    )
+    session and input: the eager localCheckpoint is a full
+    orders⋈customer aggregation job, and all THREE trend queries (MK,
+    Theil–Sen, seasonal MK) re-ran it on every build. The checkpointed
+    400-row artifact is the shared fixture; a switched sf_dir
+    re-materializes and re-binds the view."""
 
-    cache = _session_cache(spark)
-    key = derived_memo_key("mk_monthly", sf_dir, ("orders", "customer"))
-    monthly = cache.get(key)
-    if monthly is None:
+    def build():
         # All ten canonical views through the memoized registrar — an
         # ad-hoc bind of a subset would silently desync its ident memo.
         register_views(spark, sf_dir)
-        monthly = spark.sql(_MK_MONTHLY_SQL).localCheckpoint(eager=True)
-        cache[key] = monthly
+        return spark.sql(_MK_MONTHLY_SQL).localCheckpoint(eager=True)
+
+    monthly = artifact(
+        spark, "mk_monthly", sf_dir, ("orders", "customer"), build
+    )
     # ALWAYS re-bind: `monthly` is a shared name the fuzz suites also
     # bind to synthetic series (test_ks_fuzz, test_round10_fuzz), so an
     # id-keyed binding memo here served a foreign table after a fuzz

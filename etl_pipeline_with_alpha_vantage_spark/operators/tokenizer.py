@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import register_derived_cache, table
+from ..catalog import artifact, table
 from ..registry import query
 
 _BPE_MERGES = 3
@@ -230,21 +230,15 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 bpe_train_merges.__doc__ = bpe_train_merges.__doc__.format(k=_BPE_MERGES)
 
 
-# Learned merge tables are deterministic functions of the corpus file, so
-# the encoder memoizes them on (sf_dir, mtime_ns, size) — the IVF-codebook
-# cache-key device (similarity.py): a same-second in-place rewrite still
-# changes size or mtime_ns, so a stale merge table is never served.
-_MERGES_CACHE: dict[tuple[str, int, int], list[str]] = register_derived_cache({})
-
-
 def _learned_pairs_cached(spark: SparkSession, sf_dir: str) -> list[str]:
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = (sf_dir, st.st_mtime_ns, st.st_size)
-    if key not in _MERGES_CACHE:
-        _MERGES_CACHE[key] = [p for p, _, _ in _learn_merges(spark, sf_dir)]
-    return _MERGES_CACHE[key]
+    """The learned merge table, a deterministic function of the corpus."""
+    return artifact(
+        spark,
+        "bpe_merges",
+        sf_dir,
+        ("documents",),
+        lambda: [p for p, _, _ in _learn_merges(spark, sf_dir)],
+    )
 
 
 def _bpe_encode_oracle() -> str:

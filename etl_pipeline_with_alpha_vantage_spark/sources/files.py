@@ -21,40 +21,11 @@ is covered by the flagship pipeline's validation gate).
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import session_ident, table
+from ..catalog import fixture_dir, table
 from ..registry import query
-
-_FIXTURE_CACHE: dict[tuple[str, str, str], str] = {}
-
-
-def _cleanup_fixtures() -> None:
-    for path in _FIXTURE_CACHE.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _FIXTURE_CACHE.clear()
-
-
-atexit.register(_cleanup_fixtures)
-
-
-def _fixture_dir(spark: SparkSession, sf_dir: str, kind: str) -> str | None:
-    key = (session_ident(spark), sf_dir, kind)
-    path = _FIXTURE_CACHE.get(key)
-    if path is not None and os.path.isdir(path):
-        return path
-    return None
-
-
-def _remember(spark: SparkSession, sf_dir: str, kind: str, path: str) -> str:
-    _FIXTURE_CACHE[(session_ident(spark), sf_dir, kind)] = path
-    return path
 
 
 # --------------------------------------------------------------------------
@@ -75,26 +46,24 @@ ORDER BY 1
 
 
 def _csv_fixture(spark: SparkSession, sf_dir: str) -> str:
-    cached = _fixture_dir(spark, sf_dir, "csv")
-    if cached:
-        return cached
-    path = tempfile.mkdtemp(prefix="spark_graft_csv_")
-    (
-        table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % 3 == 0)
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            F.round(F.col("o_totalprice") * 100)
-            .cast("long")
-            .alias("price_cents"),
-            "o_orderpriority",
+    def write(path: str) -> None:
+        (
+            table(spark, sf_dir, "orders")
+            .filter(F.col("o_orderkey") % 3 == 0)
+            .select(
+                "o_orderkey",
+                "o_custkey",
+                F.round(F.col("o_totalprice") * 100)
+                .cast("long")
+                .alias("price_cents"),
+                "o_orderpriority",
+            )
+            .write.mode("overwrite")
+            .option("header", True)
+            .csv(path)
         )
-        .write.mode("overwrite")
-        .option("header", True)
-        .csv(path)
-    )
-    return _remember(spark, sf_dir, "csv", path)
+
+    return fixture_dir(spark, "csv", sf_dir, ("orders",), write)
 
 
 @query("source_csv_roundtrip", oracle=_CSV_ORACLE)
@@ -141,21 +110,19 @@ ORDER BY 1, 2
 
 
 def _jsonl_fixture(spark: SparkSession, sf_dir: str) -> str:
-    cached = _fixture_dir(spark, sf_dir, "jsonl")
-    if cached:
-        return cached
-    path = tempfile.mkdtemp(prefix="spark_graft_jsonl_")
-    (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 4 == 1)
-        .select(
-            "doc_id",
-            F.struct("lang", "source", "n_chars").alias("meta"),
+    def write(path: str) -> None:
+        (
+            table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 4 == 1)
+            .select(
+                "doc_id",
+                F.struct("lang", "source", "n_chars").alias("meta"),
+            )
+            .write.mode("overwrite")
+            .json(path)
         )
-        .write.mode("overwrite")
-        .json(path)
-    )
-    return _remember(spark, sf_dir, "jsonl", path)
+
+    return fixture_dir(spark, "jsonl", sf_dir, ("documents",), write)
 
 
 @query("source_jsonl_nested", oracle=_JSONL_ORACLE)
@@ -199,24 +166,22 @@ ORDER BY 1
 
 
 def _orc_fixture(spark: SparkSession, sf_dir: str) -> str:
-    cached = _fixture_dir(spark, sf_dir, "orc")
-    if cached:
-        return cached
-    path = tempfile.mkdtemp(prefix="spark_graft_orc_")
-    (
-        table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_linenumber") == 1)
-        .select(
-            "l_orderkey",
-            "l_returnflag",
-            F.round(F.col("l_quantity") * 100)
-            .cast("long")
-            .alias("qty_cents"),
+    def write(path: str) -> None:
+        (
+            table(spark, sf_dir, "lineitem")
+            .filter(F.col("l_linenumber") == 1)
+            .select(
+                "l_orderkey",
+                "l_returnflag",
+                F.round(F.col("l_quantity") * 100)
+                .cast("long")
+                .alias("qty_cents"),
+            )
+            .write.mode("overwrite")
+            .orc(path)
         )
-        .write.mode("overwrite")
-        .orc(path)
-    )
-    return _remember(spark, sf_dir, "orc", path)
+
+    return fixture_dir(spark, "orc", sf_dir, ("lineitem",), write)
 
 
 @query("source_orc_roundtrip", oracle=_ORC_ORACLE)

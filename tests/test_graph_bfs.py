@@ -11,6 +11,7 @@ from etl_pipeline_with_alpha_vantage_spark.operators.graph import (
 )
 from etl_pipeline_with_alpha_vantage_spark.operators.relational_ext import (
     sql_bfs_distances,
+    sql_recursive_hierarchy,
 )
 
 
@@ -32,11 +33,15 @@ def test_iterative_bfs_equals_recursive_cte(spark, sf_dir):
 
 
 def test_iterative_bfs_restores_recursion_limit(spark, sf_dir):
-    """The CTE form must not leak its raised cteRecursionRowLimit into
-    the shared session (round-6 advice)."""
+    """The CTE forms must not leak their raised cteRecursionRowLimit or
+    walk shuffle width into the shared session (round-6 advice)."""
     before = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
+    width = spark.conf.get("spark.sql.shuffle.partitions", None)
     sql_bfs_distances(spark, sf_dir)
     assert spark.conf.get("spark.sql.cteRecursionRowLimit", None) == before
+    assert spark.conf.get("spark.sql.shuffle.partitions", None) == width
+    sql_recursive_hierarchy(spark, sf_dir)
+    assert spark.conf.get("spark.sql.shuffle.partitions", None) == width
 
 
 def test_cosupply_edge_fixture_is_memoized_per_session(spark, sf_dir):

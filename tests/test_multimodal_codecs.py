@@ -91,12 +91,32 @@ def test_sniff_routes_real_formats():
     assert _decode_blob(ppm) == (1, 1, len(ppm), 9.0, 1)
 
 
+def _arrow_extract(batch):
+    """Run the extract generator the DataFrame API would ship directly on
+    one hand-built Arrow batch (no Spark session needed)."""
+    from etl_pipeline_with_alpha_vantage_spark.operators import (
+        multimodal as mm,
+    )
+
+    captured = {}
+
+    class _FakeDF:
+        def mapInArrow(self, fn, schema):
+            captured["fn"] = fn
+            return None
+
+    mm.decode_features(_FakeDF())
+    (out,) = list(captured["fn"](iter([batch])))
+    return out
+
+
 def test_arrow_decoder_matches_row_functions():
     """The r13 mapInArrow migration must be BYTE-exact against the row
     functions for every dispatch path: fake (arbitrary bytes), empty
-    blob, valid BMP/PPM, near-miss magic, truncated BMP. Runs the
-    extract generator directly on a hand-built Arrow batch (no Spark
-    session needed) over a deterministic fuzz corpus."""
+    blob, valid BMP/PPM, near-miss magic, truncated BMP — over binary
+    and large_binary offsets, whole and sliced batches (a slice shares
+    its parent's data buffer at a non-zero offset) — on a deterministic
+    fuzz corpus."""
     import random
 
     import pyarrow as pa
@@ -119,29 +139,43 @@ def test_arrow_decoder_matches_row_functions():
     for _ in range(200):
         blobs.append(bytes(rng.randrange(256) for _ in range(rng.randrange(0, 64))))
 
+    for typ in (pa.binary(), pa.large_binary()):
+        full = pa.record_batch(
+            [pa.array(list(range(len(blobs))), type=pa.int64()),
+             pa.array(blobs, type=typ)],
+            names=["doc_id", "blob"],
+        )
+        for lo, batch in ((0, full), (1, full.slice(1)), (5, full.slice(5, 40))):
+            out = _arrow_extract(batch)
+            got = list(zip(
+                out.column("width").to_pylist(),
+                out.column("height").to_pylist(),
+                out.column("n_bytes").to_pylist(),
+                out.column("mean_byte").to_pylist(),
+                out.column("n_frames").to_pylist(),
+            ))
+            ids = list(range(lo, lo + batch.num_rows))
+            want = [tuple(mm._decode_blob(blobs[i])) for i in ids]
+            assert out.column("doc_id").to_pylist() == ids
+            for i, g, w in zip(ids, got, want):
+                assert g == w, (
+                    f"{typ} slice@{lo} row {i}: arrow {g} != row-fn {w} "
+                    f"(blob={blobs[i]!r})"
+                )
+
+
+def test_arrow_decoder_rejects_null_blob():
+    """A NULL blob has zero-length offsets; it must fail loudly, never
+    decode to a fake 1x1 empty image."""
+    import pyarrow as pa
+    import pytest
+
     batch = pa.record_batch(
-        [pa.array(list(range(len(blobs))), type=pa.int64()),
-         pa.array(blobs, type=pa.binary())],
+        [pa.array([7, 8, 9], type=pa.int64()),
+         pa.array([b"ok", None, b"P6"], type=pa.binary())],
         names=["doc_id", "blob"],
     )
-    # grab the generator the DataFrame API would ship
-    captured = {}
-
-    class _FakeDF:
-        def mapInArrow(self, fn, schema):
-            captured["fn"] = fn
-            return None
-
-    mm.decode_features(_FakeDF())
-    (out,) = list(captured["fn"](iter([batch])))
-    got = list(zip(
-        out.column("width").to_pylist(),
-        out.column("height").to_pylist(),
-        out.column("n_bytes").to_pylist(),
-        out.column("mean_byte").to_pylist(),
-        out.column("n_frames").to_pylist(),
-    ))
-    want = [tuple(mm._decode_blob(b)) for b in blobs]
-    assert out.column("doc_id").to_pylist() == list(range(len(blobs)))
-    for i, (g, w) in enumerate(zip(got, want)):
-        assert g == w, f"row {i}: arrow {g} != row-fn {w} (blob={blobs[i]!r})"
+    with pytest.raises(ValueError, match="NULL blob at doc_id 8"):
+        _arrow_extract(batch)
+    # The sliced-off NULL is outside the batch: decoding proceeds.
+    assert _arrow_extract(batch.slice(2)).column("doc_id").to_pylist() == [9]

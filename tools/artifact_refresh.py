@@ -8,7 +8,10 @@ at every surface and merges the records in place, keeping summaries
 consistent:
 
     python tools/artifact_refresh.py name1 [name2 ...] \
-        [--round 9] [--halved DIR] [--up DIR]
+        [--round N] [--halved DIR] [--up DIR]
+
+``--round`` defaults to the newest round whose SWEEP_r{N}.json is on
+disk.
 
 Off-grid twin directories are rebuilt via tools/offgrid_twin.py when
 the given paths don't exist (they live in /tmp and evaporate between
@@ -19,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -27,6 +31,15 @@ TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
+
+
+def _newest_round() -> str:
+    rounds = [
+        int(m.group(1))
+        for f in os.listdir(REPO)
+        if (m := re.fullmatch(r"SWEEP_r(\d+)\.json", f))
+    ]
+    return str(max(rounds))
 
 
 def _verify(names: list[str], sf_dir: str, out: str) -> dict:
@@ -127,7 +140,7 @@ def main() -> int:
             return v
         return default
 
-    rnd = opt("--round", "10")
+    rnd = opt("--round", _newest_round())
     halved = opt("--halved", "/tmp/offgrid_sf05")
     up = opt("--up", "/tmp/offgrid_up")
     names = args

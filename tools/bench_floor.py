@@ -68,8 +68,8 @@ OVERRIDES: dict[str, float] = {
 # before each query's timing loop and reports the first run in a
 # separate "cold" column; the floors below remain valid for the warm
 # min-of-3 `queries` numbers, but a cold reading must not be compared
-# against them. Derived mechanically from the derived_memo_key /
-# register_derived_cache call graph (see OPTIMIZATION_r13.md).
+# against them. Derived mechanically from the catalog.artifact call
+# graph (see OPTIMIZATION_r13.md).
 AMORTIZED = [
     "bpe_apply_encode",
     "dedup_semantic_ivf",
