@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import register_views, table
+from ..functions.exact import cents, dsum, md5_long
 from ..registry import query
 
 # acctbal cents ≤ ~10^8, custkey < 10^7 at demo scales → key < 2^63.
@@ -44,13 +45,13 @@ def agg_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     second pass over the fact table."""
     c = table(spark, sf_dir, "customer")
     key = (
-        F.round(F.col("c_acctbal") * 100).cast("long") * 10_000_000
+        cents("c_acctbal") * 10_000_000
         + F.col("c_custkey")
     )
     return c.groupBy("c_nationkey").agg(
         F.max_by("c_name", key).alias("richest_customer"),
         F.min_by("c_name", key).alias("poorest_customer"),
-        (F.max(F.round(F.col("c_acctbal") * 100).cast("long")) / 100.0)
+        (F.max(cents("c_acctbal")) / 100.0)
         .cast("double")
         .alias("max_acctbal"),
     )
@@ -114,14 +115,14 @@ def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     bool_or / filtered sum) — one pass, one shuffle on the derived
     cohort key; every FILTER clause folds into the same hash-agg."""
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     is_purchase = F.col("event_type") == "purchase"
     return ev.groupBy((F.col("user_id") % 10).alias("cohort")).agg(
         F.count_if(F.col("value") > 50).alias("n_high_value"),
         F.count_if(is_purchase).alias("n_purchases"),
         F.bool_and(F.col("value") >= 0).alias("all_nonneg"),
         F.bool_or(F.col("event_type") == "error").alias("any_error"),
-        (F.sum(F.when(is_purchase, cents)) / 100.0)
+        (F.sum(F.when(is_purchase, value_c)) / 100.0)
         .cast("double")
         .alias("purchase_value"),
     )
@@ -158,10 +159,10 @@ def agg_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     g2 = F.kurtosis("value")
     sample_skew = g1 * F.sqrt(n * (n - 1)) / (n - 2)
     sample_kurt = (n - 1) / ((n - 2) * (n - 3)) * ((n + 1) * g2 + 6)
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        (F.sum(cents) / 100.0 / F.count(F.lit(1))).cast("double").alias("mean_value"),
+        (F.sum(value_c) / 100.0 / F.count(F.lit(1))).cast("double").alias("mean_value"),
         F.round(F.stddev_samp("value"), 6).alias("sd"),
         F.round(F.var_samp("value"), 6).alias("variance"),
         F.round(sample_skew, 6).alias("skew"),
@@ -277,9 +278,7 @@ def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("o_orderdate").alias("max_orderdate"),
         F.min("o_totalprice").cast("double").alias("min_price"),
         F.max("o_totalprice").cast("double").alias("max_price"),
-        (F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0)
-        .cast("double")
-        .alias("sum_price"),
+        dsum("o_totalprice").alias("sum_price"),
     )
 
 
@@ -324,9 +323,7 @@ def agg_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            (F.sum(F.round(F.col("l_quantity") * 100).cast("long")) / 100.0)
-            .cast("double")
-            .alias("total_qty"),
+            dsum("l_quantity").alias("total_qty"),
             F.min("l_extendedprice").alias("min_price"),
             F.max("l_extendedprice").alias("max_price"),
         )
@@ -476,9 +473,7 @@ def agg_equidepth_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.min("o_totalprice").alias("lo"),
             F.max("o_totalprice").alias("hi"),
-            (F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0)
-            .cast("double")
-            .alias("total_price"),
+            dsum("o_totalprice").alias("total_price"),
         )
     )
 
@@ -533,7 +528,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_cust = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+        F.sum(cents("o_totalprice")).alias(
             "monetary_cents"
         ),
     )
@@ -800,8 +795,10 @@ def agg_exact_median_2pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     middle order statistics.
     """
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    vals = o.select(cents.alias("x"), (cents / _MEDIAN_BUCKET).cast("long").alias("b"))
+    price_c = cents("o_totalprice")
+    vals = o.select(
+        price_c.alias("x"), (price_c / _MEDIAN_BUCKET).cast("long").alias("b")
+    )
     counts = vals.groupBy("b").agg(F.count(F.lit(1)).alias("c"))
     wcum = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
     cum = counts.select(
@@ -858,7 +855,7 @@ def agg_exact_median_2pass(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") >= lo_price)
         & (F.col("o_totalprice") <= hi_price)
     )
-    cents2 = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents2 = cents("o_totalprice")
     vals2 = second.select(
         cents2.alias("x"), (cents2 / _MEDIAN_BUCKET).cast("long").alias("b")
     ).filter(F.col("b").isin([p[0] for p in picks]))
@@ -924,9 +921,9 @@ def abc_pareto_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     No step ever sorts more than one bucket on one executor.
     """
     li = table(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
+    price_c = cents("l_extendedprice")
     rev = li.groupBy(F.col("l_partkey").alias("partkey")).agg(
-        F.sum(cents).alias("rev_cents")
+        F.sum(price_c).alias("rev_cents")
     )
     bucketed = rev.withColumn(
         "bucket", F.floor(F.log2(F.greatest("rev_cents", F.lit(1))))
@@ -1005,9 +1002,9 @@ def agg_exact_percentiles_2pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     implementation, and must agree to the last bit.
     """
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    price_c = cents("o_totalprice")
     vals = o.select(
-        cents.alias("x"), (cents / _MEDIAN_BUCKET).cast("long").alias("b")
+        price_c.alias("x"), (price_c / _MEDIAN_BUCKET).cast("long").alias("b")
     )
     counts = vals.groupBy("b").agg(F.count(F.lit(1)).alias("c"))
     wcum = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
@@ -1039,7 +1036,7 @@ def agg_exact_percentiles_2pass(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") >= (lo_b * _MEDIAN_BUCKET - 1) / 100.0)
         & (F.col("o_totalprice") <= ((hi_b + 1) * _MEDIAN_BUCKET + 1) / 100.0)
     )
-    cents2 = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents2 = cents("o_totalprice")
     vals2 = second.select(
         cents2.alias("x"), (cents2 / _MEDIAN_BUCKET).cast("long").alias("b")
     ).filter(F.col("b").isin(sorted({t[1] for t in targets})))
@@ -1122,9 +1119,9 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the oracle's monolithic window formulation must agree bit-for-bit).
     """
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    price_c = cents("o_totalprice")
     vals = o.select(
-        cents.alias("x"), (cents / _MEDIAN_BUCKET).cast("long").alias("b")
+        price_c.alias("x"), (price_c / _MEDIAN_BUCKET).cast("long").alias("b")
     )
     counts = vals.groupBy("b").agg(F.count(F.lit(1)).alias("c"))
     wcum = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
@@ -1149,7 +1146,7 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") >= (tb[0] * _MEDIAN_BUCKET - 1) / 100.0)
         & (F.col("o_totalprice") <= ((tb[-1] + 1) * _MEDIAN_BUCKET + 1) / 100.0)
     )
-    cents2 = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents2 = cents("o_totalprice")
     vals2 = second.select(
         cents2.alias("x"), (cents2 / _MEDIAN_BUCKET).cast("long").alias("b")
     ).filter(F.col("b").isin(tb))
@@ -1167,7 +1164,7 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     clamped = F.least(F.greatest(F.col("x"), F.lit(lo_c)), F.lit(hi_c))
     return (
-        o.select("o_orderpriority", cents.alias("x"))
+        o.select("o_orderpriority", price_c.alias("x"))
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -1457,22 +1454,7 @@ def agg_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("kmv:"),
-                    F.col("user_id").cast("string"),
-                    F.lit(":"),
-                    F.col("day").cast("string"),
-                )
-            ),
-            1,
-            13,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_long("kmv:", F.col("user_id"), ":", F.col("day"), digits=13)
     hs = el.select("event_type", h.alias("h")).distinct()
     # Two-stage bottom-k: per-(type, salt) prune first so no partition
     # ever sorts more than its own slice; provably equal to the global

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents
 from ..registry import query
 
 _ASOF_ORACLE = """
@@ -130,7 +131,7 @@ def range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("event_id").alias("n_events"),
         (
             F.coalesce(
-                F.sum(F.round(F.col("value") * 100).cast("long")), F.lit(0)
+                F.sum(cents("value")), F.lit(0)
             )
             / 100.0
         )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import md5_long
 from ..registry import query
 
 _BLOOM_K = 3  # hash functions
@@ -79,20 +80,7 @@ FROM truth
 
 
 def _pos_col(d: int, key) -> F.Column:
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit(f"bloom:{d}:"), key.cast("string"))
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % _BLOOM_M
-    )
+    return md5_long(f"bloom:{d}:", key) % _BLOOM_M
 
 
 @query("join_bloom_semi", oracle=_BLOOM_ORACLE)

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import spread, table
+from ..functions.exact import cents, md5_long, md5_uniform, norm_text
 from ..registry import query
 
 # --------------------------------------------------------------------------
@@ -157,15 +158,7 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-(k+1) is window-rank state, never a global sort.
     """
     docs = table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("aes:"), F.col("doc_id").cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_long("aes:", F.col("doc_id"))
     pri = docs.select("doc_id", "lang", "n_chars", h.alias("h")).withColumn(
         "priority", F.expr(f"(n_chars * {_AES_SCALE}) DIV (2 * h + 1)")
     )
@@ -411,29 +404,13 @@ def agg_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cms_probes(key_col: str) -> F.Column:
-    """(depth, cell) probe array for one key — the portable md5 family
-    shared verbatim with the oracle (_cms_cell_sql)."""
+    """(depth, cell) probe array for one key; _cms_cell_sql is the
+    oracle's twin."""
     return F.array(
         *[
             F.struct(
                 F.lit(d).alias("depth"),
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit(f"cms:{d}:"),
-                                    F.col(key_col).cast("string"),
-                                )
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % _CMS_WIDTH
-                ).alias("cell"),
+                (md5_long(f"cms:{d}:", F.col(key_col)) % _CMS_WIDTH).alias("cell"),
             )
             for d in range(_CMS_DEPTH)
         ]
@@ -553,9 +530,6 @@ def pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-row unpivot of one aggregate row; the corpus is scanned once.
     """
     docs = table(spark, sf_dir, "documents")
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " ")
-    )
     toks = F.size(F.split("text", " "))
     flagged = docs.select(
         "doc_id",
@@ -564,7 +538,7 @@ def pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.alias("toks"),
         (
             F.col("doc_id")
-            == F.min("doc_id").over(Window.partitionBy(F.md5(norm)))
+            == F.min("doc_id").over(Window.partitionBy(F.md5(norm_text())))
         )
         .cast("int")
         .alias("keep_dedup"),
@@ -660,22 +634,7 @@ def export_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan and the write share the key by construction.
     """
     docs = table(spark, sf_dir, "documents")
-    shard = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("shard:"), F.col("doc_id").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % _EXPORT_SHARDS
-    )
+    shard = md5_long("shard:", F.col("doc_id")) % _EXPORT_SHARDS
     cells = (
         docs.select(shard.alias("shard"), "n_chars")
         .groupBy("shard")
@@ -779,11 +738,10 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     target corpus, by importance weight under hashed-n-gram bag models.
 
     Recipe, exactly the paper's shape: (1) features = word unigrams +
-    bigrams hashed into {b} buckets (portable md5 family shared with
-    the oracle); (2) fit add-1-smoothed multinomials over buckets for
-    the TARGET slice (here lang='en', standing in for the quality
-    corpus) and the RAW corpus; (3) each document's log importance
-    weight is the sum over its feature occurrences of
+    bigrams hashed into {b} buckets; (2) fit add-1-smoothed multinomials
+    over buckets for the TARGET slice (here lang='en', standing in for
+    the quality corpus) and the RAW corpus; (3) each document's log
+    importance weight is the sum over its feature occurrences of
     ln p_target(bucket) − ln p_raw(bucket); (4) Gumbel-top-k resample:
     add deterministic Gumbel noise −ln(−ln(u)) with u drawn from
     md5(doc_id) and keep the top {k} by noised score — equivalent to
@@ -837,14 +795,7 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = grams.select(
         "doc_id",
         "lang",
-        (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("dsir:"), F.col("gram"))), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % _DSIR_BUCKETS
-        ).alias("bucket"),
+        (md5_long("dsir:", F.col("gram")) % _DSIR_BUCKETS).alias("bucket"),
     )
     # Collapse the exploded+hashed feature stream to per-(doc, bucket)
     # counts ONCE and truncate lineage: both model fits and the scoring
@@ -874,20 +825,8 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "bucket",
             (
-                F.round(
-                    F.log(
-                        (F.col("tc") + 1.0)
-                        / (F.col("t_n") + _DSIR_BUCKETS)
-                    )
-                    * 1_000_000
-                ).cast("long")
-                - F.round(
-                    F.log(
-                        (F.col("rc") + 1.0)
-                        / (F.col("r_n") + _DSIR_BUCKETS)
-                    )
-                    * 1_000_000
-                ).cast("long")
+                cents(F.log((F.col("tc") + 1.0) / (F.col("t_n") + _DSIR_BUCKETS)), 6)
+                - cents(F.log((F.col("rc") + 1.0) / (F.col("r_n") + _DSIR_BUCKETS)), 6)
             ).alias("lr_micro"),
         )
     )
@@ -900,19 +839,8 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("logw_micro")
         )
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dsir-g:"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        + 0.5
-    ) / 4294967296.0
-    gumbel = F.round(-F.log(-F.log(u)) * 1_000_000).cast("long")
+    u = md5_uniform("dsir-g:", F.col("doc_id"))
+    gumbel = cents(-F.log(-F.log(u)), 6)
     noised = scored.join(
         docs.select("doc_id", "lang", "source"), "doc_id"
     ).select(
@@ -1229,10 +1157,9 @@ def dedup_soft_downweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     count) so the hash gate is bit-exact.
     """
     docs = table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " "))
     w = Window.partitionBy("norm_hash")
     return (
-        docs.select(F.md5(norm).alias("norm_hash"), "doc_id")
+        docs.select(F.md5(norm_text()).alias("norm_hash"), "doc_id")
         .withColumn("n_dups", F.count(F.lit(1)).over(w).cast("long"))
         .select(
             "doc_id",
@@ -1335,7 +1262,7 @@ def neyman_sample(
     frame; see sample_stratified_neyman. Allocation closed-form-proven
     at 1.5M rows (designed per-stratum variances force the exact
     largest-remainder split) by tests/test_scale_smoke.py."""
-    c = F.round(F.col("value") * 100).cast("long")
+    c = cents("value")
     # Lazy checkpoint: the k-stratum moment table feeds the weight,
     # total, and allocation branches — one moment-pass fact scan (the
     # md5-rank pick pass is the inherent second scan).

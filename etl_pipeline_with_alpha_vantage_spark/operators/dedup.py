@@ -19,14 +19,13 @@ is computed with built-in integer ops (no Python in the hot path).
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import spread, table
+from ..functions.exact import md5_long, norm_text
 from ..registry import query
 
 # --------------------------------------------------------------------------
@@ -81,9 +80,8 @@ def dedup_normhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full text keeps shuffle rows small — at 100 TB you shuffle 16-byte
     keys, not documents."""
     docs = table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " "))
     return (
-        docs.select(F.md5(norm).alias("norm_hash"), "doc_id")
+        docs.select(F.md5(norm_text()).alias("norm_hash"), "doc_id")
         .groupBy("norm_hash")
         .agg(
             F.min("doc_id").alias("canonical_doc"),
@@ -232,11 +230,6 @@ def _member_coeffs(n_hashes: int = N_HASHES) -> list[tuple[int, int]]:
     ]
 
 
-def _base60(col):
-    """60-bit portable string hash: md5 hex prefix as a long."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def _member_hash_sql(h: str, m: int, a: int, b: int) -> str:
     """Multiply-add member hash of a 60-bit base, as SQL text over an
     expression string ``h``: hi·A_m + lo·B_m + m·C with hi/lo the 30-bit
@@ -259,7 +252,7 @@ _TRI_SQL = (
     "(a, bc) -> concat(a, ' ', bc))"
 )
 
-# 60-bit portable hash of every shingle (array form) — _base60 as SQL.
+# 60-bit hash of every shingle — md5_long(g, digits=15) as SQL text.
 _GHASH_SQL = (
     "transform(grams, g -> "
     "CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT))"
@@ -404,7 +397,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands → self-join per (band_idx, band_key) bucket → estimate Jaccard
     as the fraction of agreeing minhashes → keep est ≥ 0.2. Shuffles on
     the band key (bounded rows: docs × n_bands) — never a cross product.
-    The portable hash family (see _base60/_member_hash) makes this
+    The portable hash family (md5_long/_member_hash_sql) makes this
     signature tier fully oracle-checkable, unusual for LSH dedup.
     """
     docs = spread(table(spark, sf_dir, "documents"))
@@ -531,7 +524,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id",
-        F.transform(F.split("text", " "), _base60).alias("hashes"),
+        F.transform(
+            F.split("text", " "), lambda g: md5_long(g, digits=15)
+        ).alias("hashes"),
     )
     return toks.select(
         "doc_id", _simhash_udf()("hashes").alias("simhash")
@@ -810,11 +805,7 @@ def decontaminate_splits(
     fan-out the ≥2-shared-grams output floor hides.
     """
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_long(F.col("doc_id")) % 100
     toks = docs.select(
         "doc_id", bucket.alias("bucket"), F.split("text", " ").alias("toks")
     ).filter(F.size("toks") >= 3)
@@ -902,21 +893,11 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitude smaller than the corpus (only cluster representatives
     survive the groupBy).
 
-    The CC stage is switchable behind the same signature via
-    SPARK_GRAFT_CC_ALGO: "label" (default — min-label propagation,
-    O(diameter) sweeps, ideal for the shallow clusters shingle joins
-    produce) or "star" (large-star/small-star contraction, O(log² n)
-    rounds on ANY topology — the safety valve when a crawl produces
-    chain-shaped dup graphs). Both land on identical labels (cluster id
-    = component min), so the oracle adjudicates either engine."""
-    algo = os.environ.get("SPARK_GRAFT_CC_ALGO", "label")
-    if algo not in ("label", "star"):
-        raise ValueError(
-            f"SPARK_GRAFT_CC_ALGO must be label|star, got {algo!r}"
-        )
-    labels = (
-        dedup_cc_clusters_star if algo == "star" else dedup_cc_clusters
-    )(spark, sf_dir)
+    The CC stage is min-label propagation (O(diameter) sweeps, ideal for
+    the shallow clusters shingle joins produce). dedup_cc_clusters_star
+    (O(log² n) rounds on any topology) lands on the same labels and is
+    checked against the same oracle."""
+    labels = dedup_cc_clusters(spark, sf_dir)
     kept = (
         labels.groupBy("cluster_id")
         .agg((F.count(F.lit(1)) - 1).alias("n_dups_removed"))
@@ -1339,7 +1320,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id",
-        F.transform(F.split("text", " "), _base60).alias("hashes"),
+        F.transform(
+            F.split("text", " "), lambda g: md5_long(g, digits=15)
+        ).alias("hashes"),
     )
     sig = toks.select(
         "doc_id", _simhash_udf()("hashes").alias("simhash")

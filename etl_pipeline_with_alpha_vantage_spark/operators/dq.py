@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents, md5_uniform
 from ..registry import query
 
 _DQ_ORACLE = """
@@ -532,7 +533,7 @@ def dq_volume_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "n_rows",
         F.col("baseline").cast("double").alias("baseline"),
-        F.round(dev * 1_000_000).cast("long").alias("deviation_micro"),
+        cents(dev, 6).alias("deviation_micro"),
         (dev > _VOL_TOLERANCE).alias("anomalous"),
     ).orderBy("day")
 
@@ -659,8 +660,6 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows). Pure per-row digit derivation before the shuffle — the scan
     dominates, as it must at 100 TB.
     """
-    from ..functions.exact import cents
-
     li = table(spark, sf_dir, "lineitem")
     c = cents("l_extendedprice")
     obs = (
@@ -675,9 +674,7 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("observed"))
     )
     n = F.sum("observed").over(Window.partitionBy())
-    expected_ppm = F.round(
-        F.log10(1.0 + 1.0 / F.col("digit")) * 1_000_000
-    ).cast("long")
+    expected_ppm = cents(F.log10(1.0 + 1.0 / F.col("digit")), 6)
     tot = obs.select(
         "digit", "observed", n.alias("n"), expected_ppm.alias("expected_ppm")
     )
@@ -691,7 +688,7 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("observed") * 1_000_000.0 / F.col("n"))
         .cast("long")
         .alias("observed_ppm"),
-        F.round(dev * dev / exp_cnt * 1_000_000).cast("long").alias(
+        cents(dev * dev / exp_cnt, 6).alias(
             "chi2_micro"
         ),
     ).orderBy("digit")
@@ -817,18 +814,7 @@ def privacy_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("nation"))
         .agg(F.count(F.lit(1)).alias("true_n"))
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dp:"), F.col("nation").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        + 0.5
-    ) / 4294967296.0
+    u = md5_uniform("dp:", F.col("nation"))
     ln_lo = F.round(F.lit(1000000.0) * F.log(2.0 * u)).cast("long")
     ln_hi = F.round(F.lit(1000000.0) * F.log(2.0 - 2.0 * u)).cast("long")
     noise_micro = F.when(u < 0.5, F.lit(_DP_EPS_INV) * ln_lo).otherwise(

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import artifact, spread, table
+from ..functions.exact import md5_long
 from ..registry import query
 
 # One undirected co-supply edge list per (session, sf_dir): PageRank,
@@ -2240,7 +2241,6 @@ def jaccard_minhash_scored(
     ``wedge_observation`` attaches a ``wedges`` count metric to the
     exact-side post-join stage for intermediate-volume tests."""
     from .dedup import (  # noqa: PLC0415
-        _base60,
         _member_coeffs,
         _member_hash_sql,
         BAND_SIZE,
@@ -2284,7 +2284,7 @@ def jaccard_minhash_scored(
     )
 
     hsp = sp.join(hub, "part", "semi").select(
-        "supp", _base60(F.col("part").cast("string")).alias("h")
+        "supp", md5_long(F.col("part"), digits=15).alias("h")
     )
     # The K-column MIN signature subtree is referenced four times
     # downstream (band explode ×2 via bx/by, signature re-join ×2 via

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import fixture_dir, table
+from ..functions.exact import cents, dsum
 from ..registry import query
 
 _E1_ROWS = 1000  # epoch 1: (id, qty)
@@ -84,9 +85,7 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count(F.lit(1)) - F.count("qty")).alias("null_qty"),
         (F.count(F.lit(1)) - F.count("price")).alias("null_price"),
         F.sum("qty").alias("qty_total"),
-        (F.sum(F.round(F.col("price") * 100).cast("long")) / 100.0)
-        .cast("double")
-        .alias("price_total"),
+        dsum("price").alias("price_total"),
     )
 
 
@@ -157,7 +156,7 @@ def _merge_change_set(
     tgt = table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.col("c_nationkey").cast("int").alias("c_nationkey"),
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("acctbal_cents"),
+        cents("c_acctbal").alias("acctbal_cents"),
         "c_mktsegment",
     )
     in_segs = F.col("c_mktsegment").isin(*_MERGE_SEGS)
@@ -286,7 +285,7 @@ def _time_travel_fixture(spark: SparkSession, sf_dir: str) -> str:
     def write(base: str) -> None:
         o = table(spark, sf_dir, "orders").select(
             "o_orderkey",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("price_cents"),
+            cents("o_totalprice").alias("price_cents"),
         )
         snapshot_commit(
             spark, base, o.filter(F.col("o_orderkey") % 4 == 0), mode="append"

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents
 from ..registry import query
 
 _GD_ITERS = 3
@@ -126,7 +127,7 @@ def ml_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_ud = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
         F.sum(other.cast("long")).alias("n_other"),
         F.sum(
-            F.when(other, F.round(F.col("value") * 100).cast("long"))
+            F.when(other, cents("value"))
             .otherwise(F.lit(0).cast("long"))
         ).alias("cents_other"),
         F.max(
@@ -159,12 +160,12 @@ def ml_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.col("y")
         )
         g = j.agg(
-            F.sum(F.round(resid * 1_000_000).cast("long")).alias("gb"),
+            F.sum(cents(resid, 6)).alias("gb"),
             F.sum(
-                F.round(resid * F.col("x1") * 1_000_000).cast("long")
+                cents(resid * F.col("x1"), 6)
             ).alias("g1"),
             F.sum(
-                F.round(resid * F.col("x2") * 1_000_000).cast("long")
+                cents(resid * F.col("x2"), 6)
             ).alias("g2"),
             F.count(F.lit(1)).alias("n"),
         )
@@ -214,9 +215,9 @@ def ml_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n_correct"),
     ).select(
         "n_rows",
-        F.round(F.col("b") * 1_000_000).cast("long").alias("b_micro"),
-        F.round(F.col("w1") * 1_000_000).cast("long").alias("w1_micro"),
-        F.round(F.col("w2") * 1_000_000).cast("long").alias("w2_micro"),
+        cents("b", 6).alias("b_micro"),
+        cents("w1", 6).alias("w1_micro"),
+        cents("w2", 6).alias("w2_micro"),
         "n_correct",
     )
 
@@ -521,8 +522,7 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         (F.col("pos0") + 1).cast("long").alias("dim"),
-        F.round(F.col("x").cast("double") * 1_000_000)
-        .cast("long")
+        cents(F.col("x").cast("double"), 6)
         .alias("e"),
     ).localCheckpoint(eager=True)
     cent = pts.filter(F.col("vec_id") < _KM_K).select(
@@ -829,8 +829,8 @@ def ml_ols_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     examples = li.select(
         F.col("l_quantity").cast("long").alias("q"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("dc"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("yc"),
+        cents("l_discount").alias("dc"),
+        cents("l_extendedprice").alias("yc"),
     )
     return ols_fit(examples)
 
@@ -927,8 +927,8 @@ def ml_ridge_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     examples = li.select(
         F.col("l_quantity").cast("long").alias("q"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("dc"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("yc"),
+        cents("l_discount").alias("dc"),
+        cents("l_extendedprice").alias("yc"),
     )
     return ridge_fit(examples, _RIDGE_LAMBDA)
 

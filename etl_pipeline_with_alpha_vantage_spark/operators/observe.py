@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents
 from ..registry import query
 
 _CUTOFF = "1998-09-02"
@@ -49,14 +50,14 @@ def observe_inflight_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     obs_in = Observation("ingest")
     obs_out = Observation("kept")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
+    price_c = cents("l_extendedprice")
     staged = li.observe(obs_in, F.count(F.lit(1)).alias("n_input")).filter(
         F.col("l_shipdate") <= F.lit(_CUTOFF).cast("timestamp")
     )
     gated = staged.observe(
         obs_out,
         F.count(F.lit(1)).alias("n_kept"),
-        F.sum(cents).alias("revenue_cents"),
+        F.sum(price_c).alias("revenue_cents"),
     )
     # One production action drives the whole plan; observation values
     # become available when it completes.

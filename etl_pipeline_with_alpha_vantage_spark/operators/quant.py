@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents
 from ..registry import query
 
 
@@ -87,7 +88,7 @@ def sma_crossover_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("bar"),
         )
         .agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+            F.sum(cents("value")).alias("cents"),
             F.count(F.lit(1)).alias("n"),
         )
     )
@@ -192,7 +193,7 @@ def drawdown_max(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.unix_micros("ts") / 600_000_000).cast("long").alias("bar"),
     ).agg(
-        F.max(F.round(F.col("value") * 100).cast("long")).alias("close_c")
+        F.max(cents("value")).alias("close_c")
     )
     peak = F.max("close_c").over(
         Window.partitionBy("event_type")
@@ -202,10 +203,7 @@ def drawdown_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = bars.select(
         "event_type",
         "bar",
-        F.round(
-            (peak - F.col("close_c")).cast("double") / peak * 1_000_000
-        )
-        .cast("long")
+        cents((peak - F.col("close_c")).cast("double") / peak, 6)
         .alias("dd_micro"),
     )
     return (
@@ -287,7 +285,7 @@ def volatility_realized(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.unix_micros("ts") / 600_000_000).cast("long").alias("bar"),
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+        F.sum(cents("value")).alias("cents"),
         F.count(F.lit(1)).alias("n"),
     )
     w = Window.partitionBy("event_type").orderBy("bar")
@@ -305,8 +303,7 @@ def volatility_realized(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = lagged.select(
         "event_type",
         "bar",
-        F.round((price / prev - 1.0) * 1_000_000)
-        .cast("long")
+        cents(price / prev - 1.0, 6)
         .alias("ret_micro"),
     ).filter(F.col("ret_micro").isNotNull())
     return (
@@ -356,7 +353,7 @@ def returns_correlation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.unix_micros("ts") / 600_000_000).cast("long").alias("bar"),
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+        F.sum(cents("value")).alias("cents"),
         F.count(F.lit(1)).alias("n"),
     )
     w = Window.partitionBy("event_type").orderBy("bar")
@@ -374,8 +371,7 @@ def returns_correlation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = lagged.select(
         "event_type",
         "bar",
-        F.round((price / prev - 1.0) * 1_000_000)
-        .cast("long")
+        cents(price / prev - 1.0, 6)
         .alias("ret_micro"),
     ).filter(F.col("ret_micro").isNotNull())
     a = rets.select(
@@ -471,7 +467,7 @@ def rsi_indicator(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.unix_micros("ts") / 600_000_000).cast("long").alias("bar"),
     ).agg(
-        F.max(F.round(F.col("value") * 100).cast("long")).alias("close_c")
+        F.max(cents("value")).alias("close_c")
     )
     w = Window.partitionBy("event_type").orderBy("bar")
     prev = F.lag("close_c").over(w)
@@ -573,7 +569,7 @@ def bollinger_breakouts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.unix_micros("ts") / 600_000_000).cast("long").alias("bar"),
     ).agg(
-        F.max(F.round(F.col("value") * 100).cast("long")).alias("close_c")
+        F.max(cents("value")).alias("close_c")
     )
     f = (
         Window.partitionBy("event_type")
@@ -687,11 +683,11 @@ def atr_indicator(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id), same convention as ohlc_resample_bars.
     """
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     bars = ev.select(
         "event_type",
         F.floor(F.unix_micros("ts") / 600_000_000).cast("long").alias("bar"),
-        cents.alias("cents"),
+        value_c.alias("cents"),
         F.struct(F.unix_micros("ts").alias("t"), "event_id").alias("okey"),
     ).groupBy("event_type", "bar").agg(
         F.max("cents").alias("high_c"),
@@ -801,11 +797,11 @@ def stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     over types×bars dust.
     """
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     bars = ev.select(
         "event_type",
         F.floor(F.unix_micros("ts") / 600_000_000).cast("long").alias("bar"),
-        cents.alias("cents"),
+        value_c.alias("cents"),
         F.struct(F.unix_micros("ts").alias("t"), "event_id").alias("okey"),
     ).groupBy("event_type", "bar").agg(
         F.max("cents").alias("high_c"),
@@ -952,7 +948,7 @@ def macd_indicator(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("bar"),
         )
         .agg(
-            (F.max(F.round(F.col("value") * 100).cast("long")) * 1000).alias(
+            (F.max(cents("value")) * 1000).alias(
                 "mc"
             )
         )
@@ -1058,7 +1054,7 @@ def quant_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.unix_micros("ts") / 600_000_000).cast("long").alias("bar"),
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+        F.sum(cents("value")).alias("cents"),
         F.count(F.lit(1)).alias("n"),
     )
     w = Window.partitionBy("event_type").orderBy("bar")
@@ -1073,8 +1069,7 @@ def quant_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     rets = lagged.select(
         "event_type",
         "bar",
-        F.round((price / prev - 1.0) * 1_000_000)
-        .cast("long")
+        cents(price / prev - 1.0, 6)
         .alias("ret_micro"),
     ).filter(F.col("ret_micro").isNotNull())
     rw = Window.partitionBy("event_type").orderBy("ret_micro", "bar")
@@ -1206,7 +1201,7 @@ def capm_beta(ev: DataFrame) -> DataFrame:
         "event_type",
         F.floor(F.unix_micros("ts") / 600_000_000).cast("long").alias("bar"),
     ).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+        F.sum(cents("value")).alias("cents"),
         F.count(F.lit(1)).alias("n"),
     )
     w = Window.partitionBy("event_type").orderBy("bar")
@@ -1221,8 +1216,7 @@ def capm_beta(ev: DataFrame) -> DataFrame:
     rets = lagged.select(
         "event_type",
         "bar",
-        F.round((price / prev - 1.0) * 1_000_000)
-        .cast("long")
+        cents(price / prev - 1.0, 6)
         .alias("ret_micro"),
     ).filter(F.col("ret_micro").isNotNull())
 
@@ -1244,8 +1238,7 @@ def capm_beta(ev: DataFrame) -> DataFrame:
     mprev = F.col("prev_cents").cast("double") / F.col("prev_n")
     mrets = mlagged.select(
         "bar",
-        F.round((mprice / mprev - 1.0) * 1_000_000)
-        .cast("long")
+        cents(mprice / mprev - 1.0, 6)
         .alias("mret_micro"),
     ).filter(F.col("mret_micro").isNotNull())
 

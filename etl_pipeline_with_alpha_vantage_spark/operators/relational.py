@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.exact import davg, dsum, sql_davg, sql_dsum
+from ..functions.exact import cents, davg, dsum, sql_davg, sql_dsum
 from ..registry import query
 
 # --------------------------------------------------------------------------
@@ -55,8 +55,8 @@ def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_quantity") < 25)
         & F.col("l_returnflag").isin("N", "R")
     )
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_discount") * 100).cast("long")
+    price_c = cents("l_extendedprice")
+    disc_c = cents("l_discount")
     return f.agg(
         F.count(F.lit(1)).alias("n_rows"),
         dsum("l_extendedprice").alias("sum_price"),
@@ -100,9 +100,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     of input size — the canonical scale-safe aggregation shape.
     """
     li = table(spark, sf_dir, "lineitem")
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_discount") * 100).cast("long")
-    tax_c = F.round(F.col("l_tax") * 100).cast("long")
+    price_c = cents("l_extendedprice")
+    disc_c = cents("l_discount")
+    tax_c = cents("l_tax")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")

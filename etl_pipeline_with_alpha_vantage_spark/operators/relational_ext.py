@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import TABLES, register_views, scoped_conf, table
-from ..functions.exact import dsum, sql_dsum
+from ..functions.exact import cents, dsum, sql_dsum
 from ..registry import query
 
 # --------------------------------------------------------------------------
@@ -52,8 +52,8 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp")
     )
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_discount") * 100).cast("long")
+    price_c = cents("l_extendedprice")
+    disc_c = cents("l_discount")
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, F.col("l_orderkey") == o.o_orderkey)
@@ -102,8 +102,8 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     s = table(spark, sf_dir, "supplier")
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_discount") * 100).cast("long")
+    price_c = cents("l_extendedprice")
+    disc_c = cents("l_discount")
     return (
         c.join(F.broadcast(n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)),  # bounded: fixed dim (nation 25 / region 5 rows)
                c.c_nationkey == n.n_nationkey)
@@ -225,12 +225,12 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts_us")
         .rangeBetween(-600_000_000, Window.currentRow)
     )
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     return ev.select(
         "event_id",
         "user_id",
         F.count(F.lit(1)).over(w).alias("n_last_10min"),
-        (F.sum(cents).over(w) / 100.0).cast("double").alias("value_last_10min"),
+        (F.sum(value_c).over(w) / 100.0).cast("double").alias("value_last_10min"),
     )
 
 
@@ -437,7 +437,7 @@ def agg_having_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins under AQE."""
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
-    qty_c = F.round(F.col("l_quantity") * 100).cast("long")
+    qty_c = cents("l_quantity")
     big = (
         li.groupBy("l_orderkey")
         .agg(
@@ -485,7 +485,7 @@ def subquery_below_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution would re-aggregate per probe row). Exact-cents average keeps
     the 0.5·avg threshold engine-exact."""
     li = table(spark, sf_dir, "lineitem")
-    qty_c = F.round(F.col("l_quantity") * 100).cast("long")
+    qty_c = cents("l_quantity")
     avg_qty = li.groupBy(F.col("l_partkey").alias("ap_partkey")).agg(
         (F.sum(qty_c).cast("double") / F.count(F.lit(1)) / 100.0).alias("part_avg")
     )

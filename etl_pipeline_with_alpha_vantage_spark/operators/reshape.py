@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents
 from ..registry import query
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
@@ -35,13 +36,13 @@ def pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     values keeps the plan static and one-pass. Oracle uses portable
     FILTERed aggregates."""
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     wide = (
         ev.groupBy("user_id")
         .pivot("event_type", list(EVENT_TYPES))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("event_type") == "purchase", cents)).alias("pc"),
+            F.sum(F.when(F.col("event_type") == "purchase", value_c)).alias("pc"),
         )
     )
     cols = [F.col("user_id")]

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents
 from ..registry import query
 
 _TERMS = ["window", "merge"]
@@ -238,15 +239,13 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(corpus))  # bounded: 1-row global aggregate
         .select(
             "tok",
-            F.round(
+            cents(
                 F.log(
                     1.0
-                    + (F.col("n_docs") - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                )
-                * 1_000_000
+                    + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+                ),
+                6,
             )
-            .cast("long")
             .alias("idf_micro"),
             "n_docs",
             "n_toks",

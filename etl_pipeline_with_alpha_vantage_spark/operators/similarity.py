@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import artifact, spread, table
+from ..functions.exact import cents
 from ..registry import query
 
 TOP_K = 10
@@ -511,21 +512,21 @@ def _ivf_codebook(spark: SparkSession, sf_dir: str, raw: DataFrame):
             .agg(F.avg("x").alias("m"))
             .collect()
         )
-        cents = np.array(seeds)
+        centroids = np.array(seeds)
         for r in dim_means:
-            cents[r["cell"], r["pos"]] = r["m"]
-        cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-        return head, cents
+            centroids[r["cell"], r["pos"]] = r["m"]
+        centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
+        return head, centroids
 
     return artifact(spark, "ivf_codebook", sf_dir, ("embeddings",), build)
 
 
 def _ivf_cells(spark: SparkSession, sf_dir: str):
     """The corpus with its IVF cell assignment: ``(vec_id, unit, cell)``
-    plus the trained ``(head, cents)``. One full-corpus scan; the
+    plus the trained ``(head, centroids)``. One full-corpus scan; the
     codebook is a broadcast K×dim matrix inside the assign UDF."""
     raw = table(spark, sf_dir, "embeddings")
-    head, cents = _ivf_codebook(spark, sf_dir, raw)
+    head, centroids = _ivf_codebook(spark, sf_dir, raw)
     # Lazy localCheckpoint: every consumer references the assigned
     # corpus at least twice (corpus side + query side), and Catalyst
     # duplicated the two chained Arrow UDFs into 6-10 ArrowEvalPython
@@ -535,10 +536,10 @@ def _ivf_cells(spark: SparkSession, sf_dir: str):
     # so downstream probes are index reads, not re-quantization.
     corpus = (
         _units(raw)
-        .withColumn("cell", _assign_udf(cents)("unit"))
+        .withColumn("cell", _assign_udf(centroids)("unit"))
         .localCheckpoint(eager=False)
     )
-    return corpus, head, cents
+    return corpus, head, centroids
 
 
 @query("similarity_ivf_topk", oracle=_IVF_ORACLE)
@@ -551,7 +552,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    corpus, head, cents = _ivf_cells(spark, sf_dir)
+    corpus, head, centroids = _ivf_cells(spark, sf_dir)
     # Queries probe their NPROBE nearest refined centroids (tiny,
     # driver-side: N_QUERIES × K dot products on the collected matrix).
     # kind="stable" so exact dot-product ties break by ascending cell id,
@@ -560,7 +561,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = [
         (q, int(c))
         for q in sorted(i for i in head if i < N_QUERIES)
-        for c in np.argsort(-(head[q] @ cents.T), kind="stable")[:NPROBE]
+        for c in np.argsort(-(head[q] @ centroids.T), kind="stable")[:NPROBE]
     ]
     probe_df = spark.createDataFrame(probes, "query_id long, cell long")
     q = corpus.filter(F.col("vec_id") < N_QUERIES).select(
@@ -683,7 +684,7 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("long").alias("label"),
         F.posexplode("embedding").alias("pos0", "x"),
     )
-    xc = F.round(F.col("x").cast("double") * 1_000_000).cast("long")
+    xc = cents(F.col("x").cast("double"), 6)
     return (
         ex.groupBy("label", (F.col("pos0") + 1).alias("pos"))
         .agg(
@@ -1007,7 +1008,7 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept verdict — the keep-list a corpus writer joins back against.
     """
     raw = table(spark, sf_dir, "embeddings")
-    head, cents = _ivf_codebook(spark, sf_dir, raw)
+    head, centroids = _ivf_codebook(spark, sf_dir, raw)
     # Cells are LABELED by their seed vector's vec_id (the oracle's
     # seedids CTE does the same), not by centroid index: the two only
     # coincide when vec_ids are contiguous from 0 — the halved off-grid
@@ -1025,7 +1026,7 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             _as_double("embedding").alias("emb"),
             _unit_udf()("embedding").alias("unit"),
         )
-        .withColumn("_ci", _assign_udf(cents)("unit"))
+        .withColumn("_ci", _assign_udf(centroids)("unit"))
         .withColumn(
             "cell",
             F.element_at(

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents, dsum
 from ..registry import query
 
 N_SALTS = 16
@@ -32,10 +33,10 @@ def salted_agg(
     by ``key`` with salt spreading. Deterministic salt (hash of a unique
     column would also work; pmod of a monotonic id keeps it cheap)."""
     salted = df.withColumn("__salt", F.pmod(F.col("event_id"), F.lit(n_salts)))
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     partial = salted.groupBy(key, "__salt").agg(
         F.count(F.lit(1)).alias("p_cnt"),
-        F.sum(cents).alias("p_sum_c"),
+        F.sum(value_c).alias("p_sum_c"),
         F.min("value").alias("p_min"),
         F.max("value").alias("p_max"),
     )
@@ -117,10 +118,9 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew-join split handles this adaptively; the explicit form documents
     the technique and survives with AQE off.)"""
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
     profile = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("user_events"),
-        (F.sum(cents) / 100.0).cast("double").alias("user_value"),
+        dsum("value").alias("user_value"),
     )
     fact = ev.filter(F.col("event_id") % 17 == 0).select("event_id", "user_id")
     return salted_join(

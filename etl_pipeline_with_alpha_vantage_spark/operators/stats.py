@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import artifact, register_views, table
+from ..functions.exact import cents, md5_long, md5_uniform
 from ..registry import query
 
 # --------------------------------------------------------------------------
@@ -308,18 +309,7 @@ def ab_test_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument assembles differently-ordered sums across engines.
     """
     ev = table(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = md5_long("ab:", F.col("user_id")) % 2
     assigned = ev.groupBy("user_id").agg(
         F.first(arm).alias("arm"),
         F.max(
@@ -435,7 +425,7 @@ def drift_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned = ev.select(
         "event_type",
         F.floor(
-            F.round(F.col("value") * 100).cast("long") / _PSI_BUCKET_CENTS
+            cents("value") / _PSI_BUCKET_CENTS
         )
         .cast("long")
         .alias("bucket"),
@@ -544,13 +534,13 @@ def stats_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_xy").over(Window.partitionBy("segment")).alias("n_y"),
         F.sum("n_xy").over(Window.partitionBy()).alias("n"),
     )
-    pmi_micro = F.round(
+    pmi_micro = cents(
         F.log(
             (F.col("n_xy") * F.col("n")).cast("double")
             / (F.col("n_x").cast("double") * F.col("n_y"))
-        )
-        * 1_000_000
-    ).cast("long")
+        ),
+        6,
+    )
     return marg.select(
         "event_type",
         F.col("segment").cast("long").alias("segment"),
@@ -646,8 +636,6 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches fact-table volume — CUPED at 100 TB costs exactly one scan
     plus one shuffle, same as the unadjusted readout.
     """
-    from ..functions.exact import cents
-
     ev = table(spark, sf_dir, "events")
     span = ev.agg(
         (
@@ -658,18 +646,7 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("mid_us")
     )
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-    )
+    arm = md5_long("ab:", F.col("user_id")) % 2
     per_user = (
         ev.crossJoin(F.broadcast(span))  # bounded: 1-row global aggregate
         .groupBy("user_id")
@@ -818,7 +795,7 @@ def ab_offpolicy_ips(spark: SparkSession, sf_dir: str) -> DataFrame:
     logs = ev.filter(F.col("event_type").isin(*_OPE_ACTIONS)).select(
         (F.col("user_id") % 4).alias("ctx"),
         F.col("event_type").alias("action"),
-        F.round(F.col("value") * 100).cast("long").alias("reward_cents"),
+        cents("value").alias("reward_cents"),
     )
     arm_stats = logs.groupBy("ctx", "action").agg(
         F.sum("reward_cents").alias("cents"),
@@ -951,7 +928,7 @@ def stats_bootstrap_ci_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = table(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("segment"),
         "c_custkey",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
+        cents("c_acctbal").alias("cents"),
     )
     fan = base.select(
         "segment",
@@ -961,25 +938,7 @@ def stats_bootstrap_ci_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sequence(F.lit(0), F.lit(_BOOT_B - 1))
         ).alias("b"),
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("boot:"),
-                        F.col("c_custkey").cast("string"),
-                        F.lit(":"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        + 0.5
-    ) / 4294967296.0
+    u = md5_uniform("boot:", F.col("c_custkey"), ":", F.col("b"))
     w = (
         F.when(u < float(_POIS[0]), 0)
         .when(u < float(_POIS[1]), 1)
@@ -1097,7 +1056,7 @@ def ab_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = ev.select(
         "event_type",
         (F.col("user_id") % 2).alias("arm"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     arms = assign.groupBy("event_type", "arm").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1134,12 +1093,12 @@ def ab_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_arm0",
         "n_arm1",
-        F.round(F.col("diff") * 1000000).cast("long").alias(
+        cents("diff", 6).alias(
             "diff_micro_cents"
         ),
-        F.round(F.col("se") * 1000000).cast("long").alias("se_micro_cents"),
-        F.round(t_lo * 1000000).cast("long").alias("t_lower_micro"),
-        F.round(t_hi * 1000000).cast("long").alias("t_upper_micro"),
+        cents("se", 6).alias("se_micro_cents"),
+        cents(t_lo, 6).alias("t_lower_micro"),
+        cents(t_hi, 6).alias("t_upper_micro"),
         ((t_lo > _TOST_Z) & (t_hi < -_TOST_Z)).alias("equivalent"),
     ).orderBy("event_type")
 
@@ -1411,7 +1370,7 @@ def ab_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = orders.select(
         F.col("o_orderpriority").alias("grp"),
         (F.col("o_orderkey") % 2).alias("arm"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     return mw_statistic(base)
 
@@ -1551,7 +1510,7 @@ def drift_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = orders.select(
         F.col("o_orderpriority").alias("grp"),
         (F.col("o_orderkey") % 2).alias("arm"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     return ks_statistic(base)
 
@@ -1716,7 +1675,7 @@ def anova_oneway(frame: DataFrame) -> DataFrame:
     """ANOVA core over any (event_type, value) frame with 2-dp-exact
     values. Closed-form-proven at 5M rows by tests/test_scale_smoke.py
     (a synthetic with analytically known SS_between / SS_within)."""
-    c = F.round(F.col("value") * 100).cast("long")
+    c = cents("value")
     g = frame.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(c).cast("long").alias("s"),
@@ -1804,7 +1763,7 @@ def stats_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; everything after is the ANOVA one-shuffle moment pass.
     """
     ev = table(spark, sf_dir, "events")
-    c = F.round(F.col("value") * 100).cast("long")
+    c = cents("value")
     raw = ev.select("event_type", c.alias("c"))
     med = raw.groupBy("event_type").agg(
         F.round(2 * F.median("c")).cast("long").alias("med2")
@@ -2001,7 +1960,7 @@ def welch_anova(frame: DataFrame) -> DataFrame:
     """Welch ANOVA core over any (event_type, value) frame with
     2-dp-exact values; see stats_welch_anova. Fuzzed against a
     double-for-double python replay by tests/test_round10_fuzz.py."""
-    c = F.round(F.col("value") * 100).cast("long")
+    c = cents("value")
     g = frame.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(c).cast("long").alias("s"),
@@ -2166,7 +2125,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     base = ev.select(
         F.col("event_type").alias("grp"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     return kruskal_wallis(base)
 
@@ -2353,7 +2312,7 @@ def stats_dunn_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     base = ev.select(
         F.col("event_type").alias("grp"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     return dunn_test(base)
 
@@ -2490,7 +2449,7 @@ def games_howell(frame: DataFrame) -> DataFrame:
     """Games–Howell core over any (event_type, value) frame with
     2-dp-exact values; see stats_games_howell. Fuzzed against a python
     replay by tests/test_round10_fuzz.py."""
-    c = F.round(F.col("value") * 100).cast("long")
+    c = cents("value")
     # Lazy checkpoint: the k-row moment table feeds both pair sides —
     # one fact scan, not two (see welch_anova's note).
     g = frame.groupBy("event_type").agg(
@@ -2649,7 +2608,7 @@ def anova_twoway(frame: DataFrame) -> DataFrame:
     """Two-way ANOVA core over any (fa, fb, value) frame with
     2-dp-exact values; see stats_anova_twoway. Fuzzed against a
     double-for-double python replay by tests/test_round10_fuzz.py."""
-    c = F.round(F.col("value") * 100).cast("long")
+    c = cents("value")
     cells = (
         frame.groupBy("fa", "fb")
         .agg(
@@ -2960,7 +2919,7 @@ def stats_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     base = li.select(
         F.col("l_quantity").cast("long").alias("xv"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("yv"),
+        cents("l_extendedprice").alias("yv"),
     ).localCheckpoint(eager=False)
     rx = _rank2_of(base.select(F.col("xv").alias("v")))
     ry = _rank2_of(base.select(F.col("yv").alias("v")))
@@ -3090,7 +3049,7 @@ def stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderpriority").alias("treat"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     cust = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"),
@@ -3267,7 +3226,7 @@ def stats_page_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderpriority").alias("treat"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     cust = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"),

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents
 from ..registry import query
 
 # A customer whose last order is within the horizon of the dataset's
@@ -138,14 +139,14 @@ def churn_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         "*",
         F.when(
             F.col("n_events") < F.col("n_at_risk"),
-            F.round(
+            cents(
                 F.log(
                     (F.col("n_at_risk") - F.col("n_events"))
                     * 1.0
                     / F.col("n_at_risk")
-                )
-                * 1_000_000
-            ).cast("long"),
+                ),
+                6,
+            ),
         )
         .otherwise(F.lit(0).cast("long"))
         .alias("f_micro"),
@@ -171,9 +172,7 @@ def churn_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_censored",
         F.when(F.col("z") == 1, F.lit(0).cast("long"))
         .otherwise(
-            F.round(
-                F.exp(F.col("ln_s_micro") / 1_000_000.0) * 1_000_000
-            ).cast("long")
+            cents(F.exp(F.col("ln_s_micro") / 1_000_000.0), 6)
         )
         .alias("surv_micro"),
     ).orderBy("t_days")

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import spread, table
+from ..functions.exact import cents, norm_text
 from ..registry import query
 
 # --------------------------------------------------------------------------
@@ -310,14 +311,13 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         / n_tokens
     )
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " "))
     kept = docs.select(
         "doc_id",
         "source",
         "lang",
         n_tokens.alias("n_tokens"),
         stop_ratio.alias("stop_ratio"),
-        F.md5(norm).alias("norm_hash"),
+        F.md5(norm_text()).alias("norm_hash"),
     ).filter((F.col("n_tokens") >= 20) & (F.col("stop_ratio") >= 0.01))
     canon = kept.groupBy("norm_hash").agg(
         F.min("doc_id").alias("canonical_doc"),
@@ -842,14 +842,13 @@ def pipeline_chunk_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         / n_tokens
     )
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " "))
     kept = docs.select(
         "doc_id",
         "source",
         "lang",
         n_tokens.alias("n_tokens"),
         stop_ratio.alias("stop_ratio"),
-        F.md5(norm).alias("norm_hash"),
+        F.md5(norm_text()).alias("norm_hash"),
     ).filter((F.col("n_tokens") >= 20) & (F.col("stop_ratio") >= 0.01))
     canon = kept.groupBy("norm_hash").agg(F.min("doc_id").alias("canonical_doc"))
     survivors = canon.join(kept, canon.canonical_doc == kept.doc_id)
@@ -1034,11 +1033,7 @@ def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n))  # bounded: 1-row corpus token count
         .select(
             "doc_id",
-            F.round(
-                F.log(F.col("n_tokens").cast("double") / F.col("cnt"))
-                * 1_000_000
-            )
-            .cast("long")
+            cents(F.log(F.col("n_tokens").cast("double") / F.col("cnt")), 6)
             .alias("nll_units"),
         )
     )
@@ -1143,14 +1138,10 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "w1",
             "w2",
-            F.round(
-                F.log(
-                    (F.col("c1") + F.col("v")).cast("double")
-                    / (F.col("c") + 1)
-                )
-                * 1_000_000
+            cents(
+                F.log((F.col("c1") + F.col("v")).cast("double") / (F.col("c") + 1)),
+                6,
             )
-            .cast("long")
             .alias("nll_units"),
         )
     )
@@ -1310,9 +1301,7 @@ def text_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         + _QM_W[2] * (n_uniq.cast("double") / n_tok)
         + _QM_W[3] * (word_chars.cast("double") / n_tok / 10)
     )
-    score_micro = F.round(
-        (1.0 / (1.0 + F.exp(-z))) * 1_000_000
-    ).cast("long")
+    score_micro = cents(1.0 / (1.0 + F.exp(-z)), 6)
     return (
         docs.select("source", score_micro.alias("score_micro"))
         .groupBy("source")
@@ -1418,11 +1407,9 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rank"),
     ).filter(F.col("rank") <= _ZIPF_TOP_R)
     pts = ranked.select(
-        F.round(F.log(F.col("rank").cast("double")) * 1_000_000)
-        .cast("long")
+        cents(F.log(F.col("rank").cast("double")), 6)
         .alias("x"),
-        F.round(F.log(F.col("cnt").cast("double")) * 1_000_000)
-        .cast("long")
+        cents(F.log(F.col("cnt").cast("double")), 6)
         .alias("y"),
     )
     mom = pts.agg(
@@ -1647,9 +1634,7 @@ def eval_model_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         + _QM_W[2] * (n_uniq.cast("double") / n_tok)
         + _QM_W[3] * (word_chars.cast("double") / n_tok / 10)
     )
-    score_micro = F.round(
-        (1.0 / (1.0 + F.exp(-z))) * 1_000_000
-    ).cast("long")
+    score_micro = cents(1.0 / (1.0 + F.exp(-z)), 6)
     y = F.when(n_uniq * 10 >= 7 * n_tok, 1).otherwise(0)
     scored = docs.select(
         score_micro.alias("score_micro"), y.alias("y")
@@ -1766,9 +1751,7 @@ def eval_model_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         + _QM_W[2] * (n_uniq.cast("double") / n_tok)
         + _QM_W[3] * (word_chars.cast("double") / n_tok / 10)
     )
-    score_micro = F.round(
-        (1.0 / (1.0 + F.exp(-z))) * 1_000_000
-    ).cast("long")
+    score_micro = cents(1.0 / (1.0 + F.exp(-z)), 6)
     base = docs.select(
         F.col("source").alias("grp"),
         score_micro.alias("cents"),
@@ -1854,9 +1837,7 @@ def eval_model_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
         + _QM_W[2] * (n_uniq.cast("double") / n_tok)
         + _QM_W[3] * (word_chars.cast("double") / n_tok / 10)
     )
-    score_micro = F.round(
-        (1.0 / (1.0 + F.exp(-z))) * 1_000_000
-    ).cast("long")
+    score_micro = cents(1.0 / (1.0 + F.exp(-z)), 6)
     y = F.when(n_uniq * 10 >= 7 * n_tok, 1).otherwise(0).cast("long")
     e = (score_micro - 1_000_000 * y) * (score_micro - 1_000_000 * y)
     return (

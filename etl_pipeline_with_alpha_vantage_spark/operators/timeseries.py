@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents, dsum, md5_long
 from ..registry import query
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, microseconds
@@ -74,12 +75,11 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the stream handles the live tail.
     """
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
     return assign_sessions(ev).groupBy("user_id", "session_no").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
-        (F.sum(cents) / 100.0).cast("double").alias("session_value"),
+        dsum("value").alias("session_value"),
     )
 
 
@@ -126,10 +126,10 @@ def gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join/window reuse the user_id partitioning: one shuffle.
     """
     ev = table(spark, sf_dir, "events").filter(F.col("user_id") % 29 == 0)
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     daily = ev.groupBy(
         "user_id", F.to_date("ts").alias("day")
-    ).agg(F.sum(cents).alias("day_cents"))
+    ).agg(F.sum(value_c).alias("day_cents"))
     spine = (
         daily.groupBy("user_id")
         .agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
@@ -232,7 +232,7 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = table(spark, sf_dir, "events")
     day = F.to_date("ts").alias("day")
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     err = (
         ev.filter(F.col("event_type") == "error")
         .groupBy("user_id", day)
@@ -243,7 +243,7 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", day)
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
-            F.sum(cents).alias("cents"),
+            F.sum(value_c).alias("cents"),
         )
     )
     return err.join(pur, ["user_id", "day"], "full").select(
@@ -357,12 +357,7 @@ def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee none of that). Narrow projection, no shuffle; at 100 TB the
     split is a free column, not a materialization."""
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 100
-    )
+    bucket = md5_long(F.col("doc_id")) % 100
     return docs.select(
         "doc_id",
         "source",
@@ -407,16 +402,7 @@ def data_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     column doubles as the row's sampling weight for loss reweighting.
     """
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    bucket = md5_long("mix:", F.col("doc_id")) % 100
     keep_pct = (
         F.when(F.col("source").isin("src0", "src1", "src2", "src3", "src4"), 100)
         .when(F.col("source").isin("src5", "src6", "src7", "src8", "src9"), 50)
@@ -630,7 +616,7 @@ def anomaly_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     win = (
         Window.partitionBy("user_id")
@@ -703,13 +689,7 @@ def sample_reservoir_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE-sized splits; state per group is O(k), never O(rows).
     """
     docs = table(spark, sf_dir, "documents")
-    hkey = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("res:"), F.col("doc_id").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    hkey = md5_long("res:", F.col("doc_id"), digits=15)
     w = Window.partitionBy("source").orderBy("hkey", "doc_id")
     return (
         docs.select("doc_id", "source", hkey.alias("hkey"))
@@ -955,7 +935,7 @@ def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.filter((F.col("rn") == 1) & (F.col("op") == "U")).select(
         "user_id",
         F.col("ts").alias("last_ts"),
-        F.round(F.col("value") * 100).cast("long").alias("last_value_cents"),
+        cents("value").alias("last_value_cents"),
         F.col("n_changes").cast("long").alias("n_changes"),
     )
 
@@ -1089,7 +1069,7 @@ def ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_id",
             "ts",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            cents("value").alias("cents"),
         )
         .repartition("user_id")
         .sortWithinPartitions("user_id", "ts", "event_id")
@@ -1176,7 +1156,7 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "event_id",
             "ts",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            cents("value").alias("cents"),
         )
         .repartition("user_id")
         .sortWithinPartitions("user_id", "ts", "event_id")
@@ -1341,7 +1321,7 @@ def attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("purchase_id"),
         "user_id",
         F.col("ts").alias("purchase_ts"),
-        F.round(F.col("value") * 100).cast("long").alias("value_cents"),
+        cents("value").alias("value_cents"),
     )
     c = ev.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
@@ -1508,9 +1488,9 @@ def gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     so every gap has both neighbors by construction.
     """
     ev = table(spark, sf_dir, "events").filter(F.col("user_id") % 29 == 0)
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        F.sum(cents).alias("day_cents")
+        F.sum(value_c).alias("day_cents")
     )
     spine = (
         daily.groupBy("user_id")
@@ -1612,14 +1592,14 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delta is integer subtraction.
     """
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
 
     def snap(cutoff: str, suffix: str) -> DataFrame:
         filtered = ev.filter(F.col("ts") <= F.lit(cutoff).cast("timestamp"))
         key = F.struct("ts", "event_id")
         return filtered.groupBy("user_id").agg(
             F.max_by("event_type", key).alias(f"type_{suffix}"),
-            F.max_by(cents, key).alias(f"cents_{suffix}"),
+            F.max_by(value_c, key).alias(f"cents_{suffix}"),
         )
 
     s1 = snap(_SNAP_T1, "t1").withColumnRenamed("user_id", "u1")
@@ -1688,10 +1668,10 @@ def rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     dust-sized re-aggregations.
     """
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     daily = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"), F.sum(cents).alias("cents"))
+    ).agg(F.count(F.lit(1)).alias("n"), F.sum(value_c).alias("cents"))
     weekly = daily.groupBy(
         "event_type", F.date_trunc("week", "day").alias("week")
     ).agg(
@@ -1898,7 +1878,7 @@ def seasonality_weekday_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.floor(F.unix_micros("ts") / 86_400_000_000).cast("long") % 7
         ).alias("weekday"),
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        cents("value").alias("cents"),
     )
     per_day = base.groupBy("event_type", "weekday").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -2046,11 +2026,11 @@ def ohlc_resample_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     bar = F.floor(
         F.unix_micros("ts") / (_OHLC_BUCKET_MIN * 60_000_000)
     ).cast("long")
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     pricked = ev.select(
         "event_type",
         bar.alias("bar"),
-        cents.alias("cents"),
+        value_c.alias("cents"),
         F.struct(F.unix_micros("ts").alias("t"), "event_id").alias("okey"),
     )
     return (
@@ -2133,12 +2113,12 @@ def rollup_delta_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     commutative-monoid discipline as the HLL and CMS sketch rollups.
     """
     ev = table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
 
     def state(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(cents).alias("cents"),
+            F.sum(value_c).alias("cents"),
             F.max(F.unix_micros("ts")).alias("hwm_us"),
         )
 
@@ -2243,7 +2223,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = o.select(
         "o_custkey",
         ym.alias("ym"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     cohorts = keyed.groupBy("o_custkey").agg(F.min("ym").alias("cohort_ym"))
     cells = (
@@ -2307,16 +2287,13 @@ def revenue_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     ym = (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("long")
     monthly = o.groupBy(ym.alias("ym")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+        F.sum(cents("o_totalprice")).alias(
             "cents"
         ),
         F.count(F.lit(1)).alias("n_orders"),
     )
     w = Window.orderBy("ym")
-    growth = F.round(
-        (F.col("cents").cast("double") / F.lag("cents").over(w) - 1.0)
-        * 1_000_000
-    ).cast("long")
+    growth = cents(F.col("cents").cast("double") / F.lag("cents").over(w) - 1.0, 6)
     return monthly.select(
         "ym",
         "n_orders",
@@ -2720,7 +2697,7 @@ def hampel_flags(events: DataFrame, k: int = _HAMPEL_K) -> DataFrame:
             "user_id",
             "event_id",
             "ts",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            cents("value").alias("cents"),
         )
         .repartition("user_id")
         .sortWithinPartitions("user_id", "ts", "event_id")
@@ -3077,7 +3054,7 @@ def anomaly_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     gv = (
         ev.select(
             F.col("event_type").alias("grp"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
+            cents("value").alias("cents"),
         )
         .groupBy("grp", "cents")
         .agg(F.count(F.lit(1)).cast("long").alias("t"))

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.exact import davg, dsum, sql_davg, sql_dsum
+from ..functions.exact import cents, davg, dsum, sql_davg, sql_dsum
 from ..registry import query
 
 # Exact revenue: l_extendedprice * (1 - l_discount) in scaled integers.
@@ -37,8 +37,8 @@ _SQL_REV_C = (
 
 def _rev_c() -> F.Column:
     """Cents×10⁴ integer revenue term — exact and associative."""
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_discount") * 100).cast("long")
+    price_c = cents("l_extendedprice")
+    disc_c = cents("l_discount")
     return price_c * (100 - disc_c)
 
 
@@ -518,7 +518,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part_avg = li.groupBy(F.col("l_partkey").alias("avg_partkey")).agg(
         davg("l_quantity").alias("avg_qty")
     )
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
+    price_c = cents("l_extendedprice")
     return (
         li.join(p, p.p_partkey == li.l_partkey)  # SF-scaled (1/25 of part): no hint, AQE decides
         .join(part_avg, F.col("avg_partkey") == li.l_partkey)
@@ -564,7 +564,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
-    qty_c = F.round(F.col("l_quantity") * 100).cast("long")
+    qty_c = cents("l_quantity")
     big = (
         li.groupBy("l_orderkey")
         .agg(
@@ -573,7 +573,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("qty_c") > 25000)
     )
-    price = (F.round(F.col("o_totalprice") * 100).cast("long") / 100.0).alias(
+    price = (cents("o_totalprice") / 100.0).alias(
         "o_price"
     )
     return (
@@ -963,7 +963,7 @@ def q20_excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.select(
             "l_partkey",
             "l_suppkey",
-            F.round(F.col("l_quantity") * 100).cast("long").alias("qc"),
+            cents("l_quantity").alias("qc"),
         )
         .repartition("l_partkey")
         .groupBy("l_partkey", "l_suppkey")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents
 from ..registry import query
 
 # --------------------------------------------------------------------------
@@ -105,7 +106,7 @@ def window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("event_id")
     w3 = w.rowsBetween(-2, Window.currentRow)
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     return ev.select(
         "user_id",
         "event_id",
@@ -114,11 +115,11 @@ def window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("value").over(w).alias("next_value"),
         (F.col("value") - F.lag("value").over(w)).alias("delta"),
         F.row_number().over(w).cast("long").alias("seq"),
-        (F.sum(cents).over(w.rowsBetween(Window.unboundedPreceding, 0)) / 100.0)
+        (F.sum(value_c).over(w.rowsBetween(Window.unboundedPreceding, 0)) / 100.0)
         .cast("double")
         .alias("running_total"),
         (
-            F.sum(cents).over(w3)
+            F.sum(value_c).over(w3)
             / F.count(F.lit(1)).over(w3).cast("double")
             / 100.0
         )

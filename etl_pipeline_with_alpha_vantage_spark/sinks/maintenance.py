@@ -20,6 +20,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import cents
+
 
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
@@ -234,7 +236,7 @@ def refresh_daily_rollup(
         .groupBy("event_type", "day")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
+            F.sum(cents("value")).alias("value_cents"),
             F.count_distinct("user_id").alias("n_users"),
         )
     )

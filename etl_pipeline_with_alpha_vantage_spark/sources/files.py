@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import fixture_dir, table
+from ..functions.exact import cents
 from ..registry import query
 
 
@@ -53,8 +54,7 @@ def _csv_fixture(spark: SparkSession, sf_dir: str) -> str:
             .select(
                 "o_orderkey",
                 "o_custkey",
-                F.round(F.col("o_totalprice") * 100)
-                .cast("long")
+                cents("o_totalprice")
                 .alias("price_cents"),
                 "o_orderpriority",
             )
@@ -173,8 +173,7 @@ def _orc_fixture(spark: SparkSession, sf_dir: str) -> str:
             .select(
                 "l_orderkey",
                 "l_returnflag",
-                F.round(F.col("l_quantity") * 100)
-                .cast("long")
+                cents("l_quantity")
                 .alias("qty_cents"),
             )
             .write.mode("overwrite")

@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from collections.abc import Iterator, Sequence
 
 API_URL = "https://www.alphavantage.co/query"
@@ -33,6 +34,28 @@ def _raw_path(lake_dir: str, symbol: str, day: str) -> str:
     # Filename contract {symbol}_{date}.json matches the reference lake
     # (etl.py:39) so existing raw zones replay unchanged.
     return os.path.join(lake_dir, f"{symbol}_{day}.json")
+
+
+def _persist(path: str, payload: dict) -> str:
+    """Write ``payload`` to ``path`` as JSON; return the text written.
+
+    The text goes to a uniquely named tmp file beside ``path`` and is
+    renamed over it only once complete, so a write that fails partway
+    (or a task killed mid-write) never leaves a torn JSON for the
+    cache-first check to trust.
+    """
+    text = json.dumps(payload, indent=4)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+    try:
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    return text
 
 
 def is_valid_payload(payload: dict) -> bool:
@@ -75,9 +98,7 @@ def fetch_payloads(
                 # next run retries, and don't report a path for it.
                 time.sleep(sleep_sec)
                 continue
-            os.makedirs(lake_dir, exist_ok=True)
-            with open(path, "w") as f:
-                json.dump(payload, f, indent=4)
+            _persist(path, payload)
             time.sleep(sleep_sec)
         paths.append(path)
     return paths
@@ -125,9 +146,7 @@ def fetch_distributed(
     re-runs cost no wall-clock — the idempotency that makes retrying a
     half-failed 10k-symbol fan-out cheap. ``lake_dir`` must be shared
     storage every executor can reach (object store / NFS mount), the
-    same contract as any file cache; writes go through a tmp file +
-    atomic rename so a task killed mid-write never leaves a torn JSON
-    for the cache-first check to trust.
+    same contract as any file cache; writes go through ``_persist``.
 
     ``fetch_one``: injectable transport ``(symbol, api_key) -> dict``
     (must be cloudpickle-serializable); defaults to the real HTTPS
@@ -169,12 +188,7 @@ def fetch_distributed(
                     rows.append((symbol, part, None, None, True, fetched_at))
                     time.sleep(sleep_sec)
                     continue
-                os.makedirs(lake_dir, exist_ok=True)
-                text = json.dumps(payload, indent=4)
-                tmp = f"{path}.tmp.{part}.{os.getpid()}"
-                with open(tmp, "w") as f:
-                    f.write(text)
-                os.replace(tmp, path)
+                text = _persist(path, payload)
                 rows.append((symbol, part, path, text, True, fetched_at))
                 time.sleep(sleep_sec)
             yield pd.DataFrame(

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dsum
 from ..registry import query
 
 _N_ROWS = 50_000
@@ -148,9 +149,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed.groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            (F.sum(F.round(F.col("score") * 100).cast("long")) / 100.0)
-            .cast("double")
-            .alias("score_sum"),
+            dsum("score").alias("score_sum"),
             F.min("i").alias("first_i"),
             F.max("i").alias("last_i"),
         )

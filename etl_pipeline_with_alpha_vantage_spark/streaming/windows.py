@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..functions.exact import cents, dsum
 from ..registry import query
 
 _TUMBLING_ORACLE = """
@@ -42,9 +43,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("event_type", win.alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0)
-            .cast("double")
-            .alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             "event_type",
@@ -88,9 +87,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("event_type", win.alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0)
-            .cast("double")
-            .alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             "event_type",
@@ -145,9 +142,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("user_id", win.alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0)
-            .cast("double")
-            .alias("session_value"),
+            dsum("value").alias("session_value"),
         )
         .select(
             "user_id",
@@ -448,9 +443,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment", "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0)
-            .cast("double")
-            .alias("total_value"),
+            dsum("value").alias("total_value"),
         )
     )
 
@@ -484,9 +477,7 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
-        (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0)
-        .cast("double")
-        .alias("total_value"),
+        dsum("value").alias("total_value"),
     )
 
 
@@ -645,17 +636,17 @@ def ohlc_candles(events: DataFrame) -> DataFrame:
     watermark like every other window state here.
     """
     okey = F.struct(F.unix_micros("ts").alias("t"), F.col("event_id"))
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_c = cents("value")
     return (
         events.groupBy(
             "event_type", F.window("ts", "10 minutes").alias("win")
         )
         .agg(
             F.count(F.lit(1)).alias("n_ticks"),
-            (F.min_by(cents, okey) / 100.0).cast("double").alias("open"),
-            (F.max(cents) / 100.0).cast("double").alias("high"),
-            (F.min(cents) / 100.0).cast("double").alias("low"),
-            (F.max_by(cents, okey) / 100.0).cast("double").alias("close"),
+            (F.min_by(value_c, okey) / 100.0).cast("double").alias("open"),
+            (F.max(value_c) / 100.0).cast("double").alias("high"),
+            (F.min(value_c) / 100.0).cast("double").alias("low"),
+            (F.max_by(value_c, okey) / 100.0).cast("double").alias("close"),
         )
         .select(
             "event_type",

@@ -342,22 +342,17 @@ def test_two_cluster_bridge_splits_without_the_bridge(spark):
     assert all(got[i] == i for i in range(501, 1000))  # isolated ids
 
 
-def test_canonical_corpus_star_engine_matches_label_engine(
-    spark, sf_dir, monkeypatch
-):
-    """dedup_canonical_corpus behind SPARK_GRAFT_CC_ALGO=star must emit
-    the exact survivor set of the default min-label engine."""
+def test_canonical_corpus_star_engine_matches_label_engine(spark, sf_dir):
+    """The star-contraction CC engine must emit exactly the labels of the
+    min-label engine that dedup_canonical_corpus uses."""
     from etl_pipeline_with_alpha_vantage_spark.operators.dedup import (
-        dedup_canonical_corpus,
+        dedup_cc_clusters,
+        dedup_cc_clusters_star,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_CC_ALGO", raising=False)
-    base = sorted(
-        tuple(r) for r in dedup_canonical_corpus(spark, sf_dir).collect()
-    )
-    monkeypatch.setenv("SPARK_GRAFT_CC_ALGO", "star")
+    base = sorted(tuple(r) for r in dedup_cc_clusters(spark, sf_dir).collect())
     star = sorted(
-        tuple(r) for r in dedup_canonical_corpus(spark, sf_dir).collect()
+        tuple(r) for r in dedup_cc_clusters_star(spark, sf_dir).collect()
     )
     assert star == base
 

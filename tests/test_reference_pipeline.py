@@ -237,6 +237,57 @@ def test_validation_gate_failfast_mode(spark, tmp_path):
     assert "FAILFAST" in str(excinfo.value) or "Malformed" in str(excinfo.value)
 
 
+def test_live_fetch_failed_write_leaves_no_torn_cache(tmp_path, monkeypatch):
+    """A live fetch whose raw-zone write fails partway leaves nothing at
+    the cache path, so the next run refetches instead of trusting a torn
+    JSON file."""
+    from etl_pipeline_with_alpha_vantage_spark.sources import http
+
+    lake = str(tmp_path / "lake")
+    path = os.path.join(lake, "AAPL_2025-10-05.json")
+    calls = []
+
+    def fake_fetch(symbol, api_key):
+        calls.append(symbol)
+        # A value json cannot encode, placed after enough encodable text
+        # that a streaming encoder has already written part of the file.
+        last = object() if len(calls) == 1 else {"4. close": "2.0"}
+        return {
+            "Meta Data": {"2. Symbol": symbol},
+            "Time Series (Daily)": {
+                "2025-10-03": {"1. open": "1.0"},
+                "2025-10-02": last,
+            },
+        }
+
+    def fetch():
+        return fetch_payloads(
+            ["AAPL"], lake, "2025-10-05", api_key="k",
+            fetch_from_api=True, sleep_sec=0,
+        )
+
+    monkeypatch.setattr(http, "_fetch_one", fake_fetch)
+    with pytest.raises(TypeError):
+        fetch()
+    assert not os.path.exists(path)
+
+    # a rename that fails after the tmp write leaves no tmp file behind
+    def failing_replace(src, dst):
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(http.os, "replace", failing_replace)
+        with pytest.raises(OSError):
+            fetch()
+    assert os.listdir(lake) == []
+
+    assert fetch() == [path]
+    assert calls == ["AAPL"] * 3
+    with open(path) as f:
+        series = json.load(f)["Time Series (Daily)"]
+    assert series["2025-10-02"] == {"4. close": "2.0"}
+
+
 def test_fetch_distributed_mock_transport(spark, tmp_path):
     """fetch_distributed executed with an injected no-network transport —
     the reference's per-symbol loop (etl.py:39-63) at executor scale:
